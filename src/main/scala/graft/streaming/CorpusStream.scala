@@ -17,21 +17,51 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * band-partitioned parquet carrying no signature payload, and
   * signatures move only per candidate pair.
   *
-  * Exactly-once, without consumer cooperation (every sink here):
-  * foreachBatch is at-least-once, so each job (a) writes every state
-  * table through [[Zone.appendBatch]] — rows land in a
-  * `__batch_id=<id>` partition via dynamic overwrite, making a
-  * replayed batch REWRITE its own partition with the same
-  * deterministic values instead of appending duplicates — and
-  * (b) records the batch in a `_committed` marker
-  * ([[Zone.markBatchCommitted]]) as the LAST write, so a replay of a
-  * fully-committed batch is a pure no-op. A crash at any point either
-  * replays into an idempotent overwrite (before the marker) or skips
-  * (after it); state tables are value-identical under kill-and-replay
-  * (CorpusStreamSpec proves it by deleting the newest checkpoint
-  * commit and re-running).
+  * Every sink here runs through [[CorpusStream.exactlyOnce]] (or, where
+  * the operator keeps its own cursor, plain [[CorpusStream.availableNow]]).
   */
 object CorpusStream {
+
+  /** The package's one streaming-sink scaffold: `body(batch, id)` per
+    * micro-batch of `df` under `checkpointDir`, `Trigger.AvailableNow`
+    * (process everything available, then stop — the daily cron batch).
+    * At-least-once on its own: callers either merge idempotently or go
+    * through [[exactlyOnce]].
+    */
+  private[streaming] def availableNow(df: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, bid: Long) => body(batch, bid) }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** [[availableNow]] made exactly-once without consumer cooperation:
+    * foreachBatch is at-least-once, so `body` (a) writes every state
+    * table through [[Zone.appendBatch]] — rows land in a
+    * `__batch_id=<id>` partition via dynamic overwrite, making a
+    * replayed batch REWRITE its own partition with the same
+    * deterministic values instead of appending duplicates — and
+    * (b) this wrapper records the batch in the `_committed` marker under
+    * `markerDir` ([[Zone.markBatchCommitted]]) as the LAST write, so a
+    * replay of any batch id at or below the marker is a pure no-op that
+    * never calls `body`. A crash at any point either replays into an
+    * idempotent overwrite (before the marker) or skips (after it); state
+    * tables are value-identical under kill-and-replay (CorpusStreamSpec
+    * proves it by deleting the newest checkpoint commit and re-running).
+    * `body` reads its own state through [[Zone.readBatchedBefore]] at
+    * the batch id, so a replay never sees its own pre-crash appends.
+    */
+  private[streaming] def exactlyOnce(spark: SparkSession, df: DataFrame,
+      markerDir: String, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    availableNow(df, checkpointDir) { (batch, bid) =>
+      if (!Zone.lastCommittedBatch(spark, markerDir).exists(_ >= bid)) {
+        body(batch, bid)
+        Zone.markBatchCommitted(spark, markerDir, bid)
+      }
+    }
 
   /** @param docs        streaming DataFrame with `idCol` + `textCol`
     * @param indexDir    two-table signature index — `sigs/` (id, sig)
@@ -52,51 +82,41 @@ object CorpusStream {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.8): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          val newSigs = Dedup.signatures(
-            batch, textCol, idCol, shingleSize, numHashes).cache()
-          val newBands = Dedup.signatureBands(newSigs, numHashes, bands)
-          try {
-            // snapshot-isolated index read (__batch_id < bid): a replay
-            // must not see the batch's own pre-crash appends
-            val pairs = (Zone.readBatchedBefore(spark, s"$indexDir/bands", bid),
-                Zone.readBatchedBefore(spark, s"$indexDir/sigs", bid)) match {
-              case (Some(idxBands), Some(idxSigs)) =>
-                Dedup.minHashLshIncremental(idxBands, idxSigs,
-                  newBands, newSigs, numHashes, threshold)
-              case _ => // first batch: the increment IS the corpus
-                Dedup.minHashLshIncremental(newBands.limit(0), newSigs.limit(0),
-                  newBands, newSigs, numHashes, threshold)
-            }
-            Zone.appendBatch(pairs, pairsDir, bid)
-            // sigs BEFORE bands: a sig row without band rows is inert
-            // (generates no candidates), while a band row whose sig is
-            // missing would make later batches' pair verification drop
-            // the pair silently — so a crash between the two writes must
-            // leave the harmless orphan, not the dangerous one. (With
-            // idempotent batch partitions the replay heals either way;
-            // the ordering keeps the mid-crash state harmless even
-            // BEFORE the replay runs.)
-            Zone.appendBatch(newSigs, s"$indexDir/sigs", bid)
-            Zone.appendBatch(newBands, s"$indexDir/bands", bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          } finally newSigs.unpersist()
+    exactlyOnce(spark, docs, indexDir, checkpointDir) { (batch, bid) =>
+      val newSigs = Dedup.signatures(
+        batch, textCol, idCol, shingleSize, numHashes).cache()
+      val newBands = Dedup.signatureBands(newSigs, numHashes, bands)
+      try {
+        // snapshot-isolated index read (__batch_id < bid): a replay
+        // must not see the batch's own pre-crash appends
+        val pairs = (Zone.readBatchedBefore(spark, s"$indexDir/bands", bid),
+            Zone.readBatchedBefore(spark, s"$indexDir/sigs", bid)) match {
+          case (Some(idxBands), Some(idxSigs)) =>
+            Dedup.minHashLshIncremental(idxBands, idxSigs,
+              newBands, newSigs, numHashes, threshold)
+          case _ => // first batch: the increment IS the corpus
+            Dedup.minHashLshIncremental(newBands.limit(0), newSigs.limit(0),
+              newBands, newSigs, numHashes, threshold)
         }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+        Zone.appendBatch(pairs, pairsDir, bid)
+        // sigs BEFORE bands: a sig row without band rows is inert
+        // (generates no candidates), while a band row whose sig is
+        // missing would make later batches' pair verification drop
+        // the pair silently — so a crash between the two writes must
+        // leave the harmless orphan, not the dangerous one. (With
+        // idempotent batch partitions the replay heals either way;
+        // the ordering keeps the mid-crash state harmless even
+        // BEFORE the replay runs.)
+        Zone.appendBatch(newSigs, s"$indexDir/sigs", bid)
+        Zone.appendBatch(newBands, s"$indexDir/bands", bid)
+      } finally newSigs.unpersist()
+    }
 
   /** Streaming incremental SimHash near-dup — the same micro-batch
     * discipline as [[runIncrementalNearDup]] over the ONE-table
     * [[Dedup.simHashChunks]] index (the 8-byte signature rides the
     * chunk rows, so each batch is one pair append + one index append).
-    * Same exactly-once contract: idempotent batch partitions + the
-    * `_committed` marker under `indexDir`.
+    * Exactly-once via [[exactlyOnce]], marker under `indexDir`.
     */
   def runIncrementalSimHash(
       spark: SparkSession,
@@ -107,28 +127,18 @@ object CorpusStream {
       pairsDir: String,
       checkpointDir: String,
       maxHamming: Int = 3): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          val newChunks = Dedup.simHashChunks(
-            Dedup.simHashDf(batch, textCol, idCol)).cache()
-          try {
-            val pairs = Zone.readBatchedBefore(spark, indexDir, bid) match {
-              case Some(idx) => Dedup.simHashIncremental(idx, newChunks, maxHamming)
-              case None => // first batch: the increment IS the corpus
-                Dedup.simHashIncremental(newChunks.limit(0), newChunks, maxHamming)
-            }
-            Zone.appendBatch(pairs, pairsDir, bid)
-            Zone.appendBatch(newChunks, indexDir, bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          } finally newChunks.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    exactlyOnce(spark, docs, indexDir, checkpointDir) { (batch, bid) =>
+      val newChunks = Dedup.simHashChunks(
+        Dedup.simHashDf(batch, textCol, idCol)).cache()
+      try {
+        // first batch: the increment IS the corpus
+        val idx = Zone.readBatchedBefore(spark, indexDir, bid)
+          .getOrElse(newChunks.limit(0))
+        Zone.appendBatch(
+          Dedup.simHashIncremental(idx, newChunks, maxHamming), pairsDir, bid)
+        Zone.appendBatch(newChunks, indexDir, bid)
+      } finally newChunks.unpersist()
+    }
 
   /** Streaming incremental embedding near-dup — the same micro-batch
     * discipline over the two-table embedding LSH index
@@ -140,8 +150,7 @@ object CorpusStream {
     * batches' verification (the replay heals either way; the ordering
     * keeps the mid-crash state harmless before it runs). The hyperplane
     * `seed` is the frozen codebook; changing it mid-stream is a
-    * rebuild, not an increment. Same exactly-once contract as
-    * [[runIncrementalNearDup]].
+    * rebuild, not an increment. Exactly-once via [[exactlyOnce]].
     */
   def runIncrementalEmbeddingNearDup(
       spark: SparkSession,
@@ -156,33 +165,24 @@ object CorpusStream {
       bits: Int = 8,
       tables: Int = 8,
       seed: Long = 42L): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          val (newBk0, newV0) = Dedup.embeddingIndex(
-            batch, vecCol, idCol, dim, bits, tables, seed)
-          val (newBk, newV) = (newBk0.cache(), newV0.cache())
-          try {
-            val pairs = (Zone.readBatchedBefore(spark, s"$indexDir/buckets", bid),
-                Zone.readBatchedBefore(spark, s"$indexDir/vecs", bid)) match {
-              case (Some(idxBk), Some(idxV)) =>
-                Dedup.embeddingNearDupIncremental(idxBk, idxV, newBk, newV, minCosine)
-              case _ => // first batch: the increment IS the corpus
-                Dedup.embeddingNearDupIncremental(
-                  newBk.limit(0), newV.limit(0), newBk, newV, minCosine)
-            }
-            Zone.appendBatch(pairs, pairsDir, bid)
-            Zone.appendBatch(newV, s"$indexDir/vecs", bid)
-            Zone.appendBatch(newBk, s"$indexDir/buckets", bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          } finally { newBk.unpersist(); newV.unpersist() }
+    exactlyOnce(spark, vectors, indexDir, checkpointDir) { (batch, bid) =>
+      val (newBk0, newV0) = Dedup.embeddingIndex(
+        batch, vecCol, idCol, dim, bits, tables, seed)
+      val (newBk, newV) = (newBk0.cache(), newV0.cache())
+      try {
+        val pairs = (Zone.readBatchedBefore(spark, s"$indexDir/buckets", bid),
+            Zone.readBatchedBefore(spark, s"$indexDir/vecs", bid)) match {
+          case (Some(idxBk), Some(idxV)) =>
+            Dedup.embeddingNearDupIncremental(idxBk, idxV, newBk, newV, minCosine)
+          case _ => // first batch: the increment IS the corpus
+            Dedup.embeddingNearDupIncremental(
+              newBk.limit(0), newV.limit(0), newBk, newV, minCosine)
         }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+        Zone.appendBatch(pairs, pairsDir, bid)
+        Zone.appendBatch(newV, s"$indexDir/vecs", bid)
+        Zone.appendBatch(newBk, s"$indexDir/buckets", bid)
+      } finally { newBk.unpersist(); newV.unpersist() }
+    }
 
   /** Streaming IVF index maintenance — the ANN side of the same
     * discipline: the first micro-batch bootstraps the two-table index
@@ -214,27 +214,19 @@ object CorpusStream {
       indexDir: String,
       checkpointDir: String,
       nCentroids: Int = 16): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val centsDir = s"$indexDir/centroids"
-        val cellsDir = s"$indexDir/cells"
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else Zone.readIfExists(spark, centsDir) match {
-          case Some(cents) =>
-            Zone.appendBatch(
-              IvfIndex.assignIncrement(batch, idCol, vecCol, cents), cellsDir, bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          case None => // first batch bootstraps the codebook
-            val (cents, cells) = IvfIndex.buildIndex(batch, idCol, vecCol, nCentroids)
-            Zone.overwriteInPlace(spark, cents, centsDir)
-            Zone.appendBatch(cells, cellsDir, bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-        }
+    exactlyOnce(spark, vectors, indexDir, checkpointDir) { (batch, bid) =>
+      val centsDir = s"$indexDir/centroids"
+      val cellsDir = s"$indexDir/cells"
+      Zone.readIfExists(spark, centsDir) match {
+        case Some(cents) =>
+          Zone.appendBatch(
+            IvfIndex.assignIncrement(batch, idCol, vecCol, cents), cellsDir, bid)
+        case None => // first batch bootstraps the codebook
+          val (cents, cells) = IvfIndex.buildIndex(batch, idCol, vecCol, nCentroids)
+          Zone.overwriteInPlace(spark, cents, centsDir)
+          Zone.appendBatch(cells, cellsDir, bid)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming SemDeDup — semantic-dedup verdicts as the corpus
     * streams: maintains the ANN family's `(centroids, cells)` index
@@ -246,7 +238,7 @@ object CorpusStream {
     * replayed batch probes only cells from batches before itself and
     * its verdicts recompute value-identically; the assignment runs
     * once per batch and feeds both the verdicts and the cells append.
-    * Same exactly-once contract as the rest of the family.
+    * Exactly-once via [[exactlyOnce]].
     */
   def runIncrementalSemDedup(
       spark: SparkSession,
@@ -258,41 +250,33 @@ object CorpusStream {
       checkpointDir: String,
       nCentroids: Int = 16,
       minCosine: Double = 0.5): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val centsDir = s"$indexDir/centroids"
-        val cellsDir = s"$indexDir/cells"
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else Zone.readIfExists(spark, centsDir) match {
-          case Some(cents) =>
-            val newCells = IvfIndex
-              .assignIncrement(batch, idCol, vecCol, cents).cache()
-            try {
-              val prior = Zone.readBatchedBefore(spark, cellsDir, bid)
-                .getOrElse(newCells.limit(0))
-              Zone.appendBatch(
-                Dedup.semDedupOnCells(prior, newCells, idCol, minCosine),
-                verdictsDir, bid)
-              Zone.appendBatch(newCells, cellsDir, bid)
-              Zone.markBatchCommitted(spark, indexDir, bid)
-            } finally newCells.unpersist()
-          case None => // first batch bootstraps the codebook
-            val (cents, cells0) = IvfIndex.buildIndex(batch, idCol, vecCol, nCentroids)
-            val cells = cells0.cache()
-            try {
-              Zone.overwriteInPlace(spark, cents, centsDir)
-              Zone.appendBatch(
-                Dedup.semDedupOnCells(cells.limit(0), cells, idCol, minCosine),
-                verdictsDir, bid)
-              Zone.appendBatch(cells, cellsDir, bid)
-              Zone.markBatchCommitted(spark, indexDir, bid)
-            } finally cells.unpersist()
-        }
+    exactlyOnce(spark, vectors, indexDir, checkpointDir) { (batch, bid) =>
+      val centsDir = s"$indexDir/centroids"
+      val cellsDir = s"$indexDir/cells"
+      Zone.readIfExists(spark, centsDir) match {
+        case Some(cents) =>
+          val newCells = IvfIndex
+            .assignIncrement(batch, idCol, vecCol, cents).cache()
+          try {
+            val prior = Zone.readBatchedBefore(spark, cellsDir, bid)
+              .getOrElse(newCells.limit(0))
+            Zone.appendBatch(
+              Dedup.semDedupOnCells(prior, newCells, idCol, minCosine),
+              verdictsDir, bid)
+            Zone.appendBatch(newCells, cellsDir, bid)
+          } finally newCells.unpersist()
+        case None => // first batch bootstraps the codebook
+          val (cents, cells0) = IvfIndex.buildIndex(batch, idCol, vecCol, nCentroids)
+          val cells = cells0.cache()
+          try {
+            Zone.overwriteInPlace(spark, cents, centsDir)
+            Zone.appendBatch(
+              Dedup.semDedupOnCells(cells.limit(0), cells, idCol, minCosine),
+              verdictsDir, bid)
+            Zone.appendBatch(cells, cellsDir, bid)
+          } finally cells.unpersist()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** Streaming incremental substring-span dedup — the positional
     * family member: each micro-batch marks its non-canonical k-token
@@ -306,8 +290,8 @@ object CorpusStream {
     * earlier batch already holds is harmless — the probe is a
     * semi-join and the operator is spec'd robust to a non-distinct
     * index; compaction may dedupe at leisure. Batch ids must ride the
-    * family's monotonic-doc-id contract. Same exactly-once contract as
-    * [[runIncrementalNearDup]].
+    * family's monotonic-doc-id contract. Exactly-once via
+    * [[exactlyOnce]].
     */
   def runIncrementalSpans(
       spark: SparkSession,
@@ -318,43 +302,28 @@ object CorpusStream {
       spansDir: String,
       checkpointDir: String,
       k: Int = 8): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          // cached: the batch feeds both the span marking and the
-          // index-extension hash pass (family style — one compute per
-          // micro-batch)
-          val b = batch.cache()
-          try {
-            val newHashes = SubstringDedup.shinglePostings(b, textCol, idCol, k)
-            val spans = Zone.readBatchedBefore(spark, indexDir, bid) match {
-              case Some(idx) =>
-                SubstringDedup.nonCanonicalSpansIncremental(
-                  idx, b, textCol, idCol, k)
-              case None => // first batch: the increment IS the corpus
-                SubstringDedup.nonCanonicalSpansIncremental(
-                  newHashes.limit(0), b, textCol, idCol, k)
-            }
-            Zone.appendBatch(spans, spansDir, bid)
-            Zone.appendBatch(newHashes, indexDir, bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          } finally b.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    exactlyOnce(spark, docs, indexDir, checkpointDir) { (batch, bid) =>
+      // cached: the batch feeds both the span marking and the
+      // index-extension hash pass (family style — one compute per
+      // micro-batch)
+      val b = batch.cache()
+      try {
+        val newHashes = SubstringDedup.shinglePostings(b, textCol, idCol, k)
+        // first batch: the increment IS the corpus
+        val idx = Zone.readBatchedBefore(spark, indexDir, bid)
+          .getOrElse(newHashes.limit(0))
+        Zone.appendBatch(SubstringDedup.nonCanonicalSpansIncremental(
+          idx, b, textCol, idCol, k), spansDir, bid)
+        Zone.appendBatch(newHashes, indexDir, bid)
+      } finally b.unpersist()
+    }
 
   /** Streaming paragraph dedup — the continuous form of the
     * [[Dedup.paraPostings]] index: each micro-batch rebuilds its
     * documents against the persisted postings
     * ([[Dedup.paragraphDedupIncremental]] — election work restricted
     * to the batch's digests), appends the rebuilt docs to the dedup
-    * log, and extends the postings. Exactly-once by the family
-    * discipline: batch-partitioned idempotent appends, `_committed`
-    * marker written last, replays no-op.
+    * log, and extends the postings. Exactly-once via [[exactlyOnce]].
     */
   def runIncrementalParagraphs(
       spark: SparkSession,
@@ -365,30 +334,18 @@ object CorpusStream {
       dedupDir: String,
       checkpointDir: String,
       sep: String = "\n\n"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          val b = batch.cache()
-          try {
-            val newPostings = Dedup.paraPostings(b, textCol, idCol, sep)
-            val rebuilt = Zone.readBatchedBefore(spark, indexDir, bid) match {
-              case Some(idx) =>
-                Dedup.paragraphDedupIncremental(idx, b, textCol, idCol, sep)
-              case None => // first batch: the increment IS the corpus
-                Dedup.paragraphDedupIncremental(
-                  newPostings.limit(0), b, textCol, idCol, sep)
-            }
-            Zone.appendBatch(rebuilt, dedupDir, bid)
-            Zone.appendBatch(newPostings, indexDir, bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          } finally b.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    exactlyOnce(spark, docs, indexDir, checkpointDir) { (batch, bid) =>
+      val b = batch.cache()
+      try {
+        val newPostings = Dedup.paraPostings(b, textCol, idCol, sep)
+        // first batch: the increment IS the corpus
+        val idx = Zone.readBatchedBefore(spark, indexDir, bid)
+          .getOrElse(newPostings.limit(0))
+        Zone.appendBatch(Dedup.paragraphDedupIncremental(
+          idx, b, textCol, idCol, sep), dedupDir, bid)
+        Zone.appendBatch(newPostings, indexDir, bid)
+      } finally b.unpersist()
+    }
 
   /** Streaming BM25 search-index maintenance — the simplest member of
     * the index family: postings `(id, term, tf, dl)` and doc lengths
@@ -397,9 +354,8 @@ object CorpusStream {
     * appends its own rows and touches nothing else — no incremental
     * join, no state rewrite. Queries probe the accumulated tables via
     * [[graft.operators.Bm25.searchPostings]] (the lens table doubles
-    * as the N/avgdl meta source). Same exactly-once discipline:
-    * idempotent `__batch_id` partitions + `_committed` marker written
-    * last. Write order: lens BEFORE postings — a crash between the
+    * as the N/avgdl meta source). Exactly-once via [[exactlyOnce]].
+    * Write order: lens BEFORE postings — a crash between the
     * two leaves a doc that counts toward N/avgdl but can't match
     * (indistinguishable from an empty doc, harmless until the replay
     * heals it), while the opposite orphan would score the doc under a
@@ -412,26 +368,17 @@ object CorpusStream {
       idCol: String,
       indexDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          val b = batch.cache()
-          try {
-            Zone.appendBatch(
-              graft.operators.Bm25.docLens(b, textCol, idCol),
-              s"$indexDir/lens", bid)
-            Zone.appendBatch(
-              graft.operators.Bm25.postings(b, textCol, idCol),
-              s"$indexDir/postings", bid)
-            Zone.markBatchCommitted(spark, indexDir, bid)
-          } finally b.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    exactlyOnce(spark, docs, indexDir, checkpointDir) { (batch, bid) =>
+      val b = batch.cache()
+      try {
+        Zone.appendBatch(
+          graft.operators.Bm25.docLens(b, textCol, idCol),
+          s"$indexDir/lens", bid)
+        Zone.appendBatch(
+          graft.operators.Bm25.postings(b, textCol, idCol),
+          s"$indexDir/postings", bid)
+      } finally b.unpersist()
+    }
 
   /** Streaming PQ-codes maintenance — the vector twin of
     * [[runIncrementalSearchIndex]]: codes `(id, codes, distortion)`
@@ -441,11 +388,11 @@ object CorpusStream {
     * no state rewrite (the [[graft.operators.Pq.readIndex]]
     * frozen-codebook discipline: a re-sampled codebook would silently
     * re-define every already-written code). The codebook table writes
-    * ONCE, before the stream starts, so a crash can never leave codes
-    * that predate their codebook. Queries probe via
-    * [[graft.operators.Pq.searchAdc]] over the accumulated codes.
-    * Same exactly-once discipline: idempotent `__batch_id` partitions
-    * + `_committed` marker written last.
+    * ONCE, before the stream's first start (crash-safe swap), so a crash
+    * can never leave codes that predate their codebook; a restart finds
+    * it present and refuses any `cb` that differs from it. Queries probe
+    * via [[graft.operators.Pq.searchAdc]] over the accumulated codes.
+    * Exactly-once via [[exactlyOnce]].
     */
   def runIncrementalPqCodes(
       spark: SparkSession,
@@ -455,22 +402,20 @@ object CorpusStream {
       cb: graft.operators.Pq.Codebook,
       indexDir: String,
       checkpointDir: String): StreamingQuery = {
-    graft.operators.Pq.codebookDf(spark, cb)
-      .write.mode("overwrite").parquet(s"$indexDir/codebook")
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, indexDir).exists(_ >= bid)) ()
-        else {
-          Zone.appendBatch(
-            graft.operators.Pq.encode(batch, idCol, vecCol, cb),
-            s"$indexDir/codes", bid)
-          Zone.markBatchCommitted(spark, indexDir, bid)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val cbDir = s"$indexDir/codebook"
+    Zone.readIfExists(spark, cbDir) match {
+      case Some(existing) =>
+        require(graft.operators.Pq.codebookFromDf(existing) == cb,
+          s"PQ codes at $indexDir were encoded with another codebook " +
+            "— a new codebook is a rebuild into a fresh indexDir")
+      case None =>
+        Zone.overwriteInPlace(spark, graft.operators.Pq.codebookDf(spark, cb), cbDir)
+    }
+    exactlyOnce(spark, docs, indexDir, checkpointDir) { (batch, bid) =>
+      Zone.appendBatch(
+        graft.operators.Pq.encode(batch, idCol, vecCol, cb),
+        s"$indexDir/codes", bid)
+    }
   }
 
   /** Streaming sketch-table maintenance — the metrics twin of
@@ -485,8 +430,8 @@ object CorpusStream {
     * Appends are per-batch-sized (≤ groups × (k + 1) rows each), so
     * the state grows with BATCH COUNT, not data; fold it down any
     * time with [[compactSketchState]] (merge-rewrite, value-identical
-    * by the canonical-merge property). Same exactly-once discipline:
-    * idempotent `__batch_id` partitions + `_committed` marker last.
+    * by the canonical-merge property). Exactly-once via
+    * [[exactlyOnce]].
     */
   def runIncrementalSketches(
       spark: SparkSession,
@@ -500,43 +445,34 @@ object CorpusStream {
     // both aggregators must accept k, and the violation must surface
     // HERE, not mid-batch after the theta append already landed
     require(k >= 16, s"k must be >= 16 (the QuantileSketch floor), got $k")
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, stateDir).exists(_ >= bid)) ()
-        else {
-          val b = batch.cache()
-          try {
-            Zone.appendBatch(
-              graft.operators.ThetaSketch.sketch(b, groupCols, keyCol, k),
-              s"$stateDir/theta", bid)
-            val agg = udaf(new graft.operators.QuantileSketch.Agg(k),
-              org.apache.spark.sql.Encoders.tuple(
-                org.apache.spark.sql.Encoders.scalaLong,
-                org.apache.spark.sql.Encoders.scalaLong))
-            // NULL keys and failed value casts must drop BEFORE the
-            // non-nullable (Long, Long) input encoder, or one bad row
-            // kills the stream (the theta leg's sketch() filters too).
-            // try_cast, not cast: Spark 4 ANSI mode makes a plain cast
-            // THROW on malformed input — a poison-pill row would fail
-            // the batch on every replay forever
-            Zone.appendBatch(
-              b.withColumn("__h", graft.functions.AuditableHash.h60(col(keyCol)))
-                .withColumn("__v", expr(s"try_cast(`$valueCol` AS BIGINT)"))
-                .filter(col("__h").isNotNull && col("__v").isNotNull)
-                .groupBy(groupCols.map(col): _*)
-                .agg(agg(col("__h"), col("__v")).as("sk"))
-                .select(groupCols.map(col) ++ Seq(col("sk.n").as("n"),
-                  col("sk.level").as("level"), col("sk.hashes").as("hashes"),
-                  col("sk.values").as("values")): _*),
-              s"$stateDir/quantile", bid)
-            Zone.markBatchCommitted(spark, stateDir, bid)
-          } finally b.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    exactlyOnce(spark, docs, stateDir, checkpointDir) { (batch, bid) =>
+      val b = batch.cache()
+      try {
+        Zone.appendBatch(
+          graft.operators.ThetaSketch.sketch(b, groupCols, keyCol, k),
+          s"$stateDir/theta", bid)
+        val agg = udaf(new graft.operators.QuantileSketch.Agg(k),
+          org.apache.spark.sql.Encoders.tuple(
+            org.apache.spark.sql.Encoders.scalaLong,
+            org.apache.spark.sql.Encoders.scalaLong))
+        // NULL keys and failed value casts must drop BEFORE the
+        // non-nullable (Long, Long) input encoder, or one bad row
+        // kills the stream (the theta leg's sketch() filters too).
+        // try_cast, not cast: Spark 4 ANSI mode makes a plain cast
+        // THROW on malformed input — a poison-pill row would fail
+        // the batch on every replay forever
+        Zone.appendBatch(
+          b.withColumn("__h", graft.functions.AuditableHash.h60(col(keyCol)))
+            .withColumn("__v", expr(s"try_cast(`$valueCol` AS BIGINT)"))
+            .filter(col("__h").isNotNull && col("__v").isNotNull)
+            .groupBy(groupCols.map(col): _*)
+            .agg(agg(col("__h"), col("__v")).as("sk"))
+            .select(groupCols.map(col) ++ Seq(col("sk.n").as("n"),
+              col("sk.level").as("level"), col("sk.hashes").as("hashes"),
+              col("sk.values").as("values")): _*),
+          s"$stateDir/quantile", bid)
+      } finally b.unpersist()
+    }
   }
 
   /** Merged views of a [[runIncrementalSketches]] state: the theta
@@ -635,7 +571,7 @@ object CorpusStream {
     *
     * All three are batch-sized aggregates over the increment (domain
     * rows / sketch cells / ≤ m/32 words — never corpus-sized), landing
-    * as `__batch_id` partitions with the `_committed` marker LAST.
+    * as `__batch_id` partitions under [[exactlyOnce]].
     * Replay semantics differ BY LEG and the discipline covers the
     * strictest: mixloss sums and CM cells are additive — a replayed
     * append double-counts, so they NEED the idempotent
@@ -663,62 +599,53 @@ object CorpusStream {
       thetaK: Int = 256,
       hhK: Int = 64): StreamingQuery = {
     import graft.functions.{TextFunctions => T}
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (Zone.lastCommittedBatch(spark, stateDir).exists(_ >= bid)) ()
-        else {
-          import spark.implicits._
-          Zone.readIfExists(spark, s"$stateDir/advmeta") match {
-            case Some(mdf) =>
-              val r = mdf.head()
-              require(r.getAs[Int]("shingle_n") == shingleSize &&
-                r.getAs[Int]("m") == bloomM && r.getAs[Int]("k") == bloomK &&
-                r.getAs[Int]("theta_k") == thetaK && r.getAs[Int]("hh_k") == hhK,
-                s"advisory state at $stateDir was written with other parameters " +
-                  "— mismatched sketch bits/cells would merge into noise")
-            case None =>
-              // through the temp-and-rename swap (ADVICE r14): a plain
-              // overwrite crashing mid-write leaves a partial dir the
-              // replay's readIfExists then reads (or dies on) with no
-              // self-healing path; the swap is all-or-nothing
-              Zone.overwriteInPlace(spark,
-                Seq((shingleSize, bloomM, bloomK, thetaK, hhK))
-                  .toDF("shingle_n", "m", "k", "theta_k", "hh_k"),
-                s"$stateDir/advmeta")
-          }
-          val b = batch.select(col("doc_id"), col("text")).cache()
-          try {
-            // mixloss: the SAME narrow per-row map the batch job's
-            // annotate derives lang_pred / n_tokens from — no LSH or
-            // canonical state needed, so the streamed leg stays pure
-            val perDoc = b
-              .withColumn("__tstats", T.textStats(col("text")))
-              .withColumn("n_tokens", T.tokenCountFrom(col("__tstats")).cast("long"))
-              .withColumn("lang_pred", T.langIdFrom(col("__tstats")))
-              .withColumn("__loss_fp",
-                when(col("n_tokens") > 0,
-                  expr("length(text) * 1024L div n_tokens"))
-                  .otherwise(lit(0L)))
-            Zone.appendBatch(graft.operators.DomainMixture.lossStats(
-              perDoc, "lang_pred", "__loss_fp"), s"$stateDir/mixloss", bid)
-            val (t, c, k2) = graft.operators.Salting.skewStateFrames(
-              b.withColumn("content_fp", T.contentFingerprint(col("text")))
-                .select(col("content_fp")),
-              Seq("content_fp"), thetaK, hhK)
-            Zone.appendBatch(t, s"$stateDir/skew/theta", bid)
-            Zone.appendBatch(c, s"$stateDir/skew/cm", bid)
-            Zone.appendBatch(k2, s"$stateDir/skew/cands", bid)
-            Zone.appendBatch(graft.operators.PortableBloom.shingleSketch(
-              b, "text", "doc_id", shingleSize, bloomM, bloomK),
-              s"$stateDir/bloom", bid)
-            Zone.markBatchCommitted(spark, stateDir, bid)
-          } finally b.unpersist()
-        }
+    exactlyOnce(spark, docs, stateDir, checkpointDir) { (batch, bid) =>
+      import spark.implicits._
+      Zone.readIfExists(spark, s"$stateDir/advmeta") match {
+        case Some(mdf) =>
+          val r = mdf.head()
+          require(r.getAs[Int]("shingle_n") == shingleSize &&
+            r.getAs[Int]("m") == bloomM && r.getAs[Int]("k") == bloomK &&
+            r.getAs[Int]("theta_k") == thetaK && r.getAs[Int]("hh_k") == hhK,
+            s"advisory state at $stateDir was written with other parameters " +
+              "— mismatched sketch bits/cells would merge into noise")
+        case None =>
+          // through the temp-and-rename swap (ADVICE r14): a plain
+          // overwrite crashing mid-write leaves a partial dir the
+          // replay's readIfExists then reads (or dies on) with no
+          // self-healing path; the swap is all-or-nothing
+          Zone.overwriteInPlace(spark,
+            Seq((shingleSize, bloomM, bloomK, thetaK, hhK))
+              .toDF("shingle_n", "m", "k", "theta_k", "hh_k"),
+            s"$stateDir/advmeta")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val b = batch.select(col("doc_id"), col("text")).cache()
+      try {
+        // mixloss: the SAME narrow per-row map the batch job's
+        // annotate derives lang_pred / n_tokens from — no LSH or
+        // canonical state needed, so the streamed leg stays pure
+        val perDoc = b
+          .withColumn("__tstats", T.textStats(col("text")))
+          .withColumn("n_tokens", T.tokenCountFrom(col("__tstats")).cast("long"))
+          .withColumn("lang_pred", T.langIdFrom(col("__tstats")))
+          .withColumn("__loss_fp",
+            when(col("n_tokens") > 0,
+              expr("length(text) * 1024L div n_tokens"))
+              .otherwise(lit(0L)))
+        Zone.appendBatch(graft.operators.DomainMixture.lossStats(
+          perDoc, "lang_pred", "__loss_fp"), s"$stateDir/mixloss", bid)
+        val (t, c, k2) = graft.operators.Salting.skewStateFrames(
+          b.withColumn("content_fp", T.contentFingerprint(col("text")))
+            .select(col("content_fp")),
+          Seq("content_fp"), thetaK, hhK)
+        Zone.appendBatch(t, s"$stateDir/skew/theta", bid)
+        Zone.appendBatch(c, s"$stateDir/skew/cm", bid)
+        Zone.appendBatch(k2, s"$stateDir/skew/cands", bid)
+        Zone.appendBatch(graft.operators.PortableBloom.shingleSketch(
+          b, "text", "doc_id", shingleSize, bloomM, bloomK),
+          s"$stateDir/bloom", bid)
+      } finally b.unpersist()
+    }
   }
 
   /** Merged views of a [[runIncrementalAdvisories]] state — each leg
@@ -753,19 +680,6 @@ object CorpusStream {
     (mixloss, bloom, skew)
   }
 
-  /** Streaming training-shard export — the continuous form of the
-    * export family's tail: each micro-batch rides
-    * [[graft.operators.Sharding.continueShards]], continuing the
-    * token cumsum from the persisted cursor so the shard one
-    * micro-batch leaves part-filled keeps filling in the next.
-    * Exactly-once comes from the operator itself, not this wrapper:
-    * the cursor swap is the committed marker (any batch id ≤ the
-    * committed one no-ops — streaming batch ids are monotonic by
-    * construction) and the shard rows write under
-    * `(__batch_id, shard_id)` with dynamic overwrite, so a replay
-    * rewrites its own partitions byte-identically. Same state layout
-    * as the batch path — the two share `stateDir`.
-    */
   /** Streaming CURATION — the continuous form of the full ordered
     * pipeline ([[graft.jobs.CorpusJob.runCurationIncremental]]'s
     * micro-batch twin): each batch runs the nine stages against the
@@ -782,10 +696,8 @@ object CorpusStream {
     * `stateDir/curation/stream/…` in `__batch_id` partitions. The
     * split is what makes the exactly-once contract compose with a
     * batch-written bootstrap: the bootstrap needs no batch isolation
-    * (it never replays), while the stream side gets the family's full
-    * discipline — snapshot-isolated prior reads (`__batch_id < bid`,
-    * so a replay never sees its own pre-crash appends), idempotent
-    * batch-partition appends, `_committed` marker written last.
+    * (it never replays), while the stream side runs under
+    * [[exactlyOnce]] with its marker in `stateDir/curation/stream`.
     * Verdicts append under `stream/annotated` BEFORE the postings
     * extensions, mirroring the batch twin's materialize-then-extend
     * order. Doc ids must grow monotonically across batches (the
@@ -800,39 +712,44 @@ object CorpusStream {
       cfg: graft.jobs.CorpusJob.CurationConfig =
         graft.jobs.CorpusJob.CurationConfig(),
       blocked: Option[DataFrame] = None,
-      embeddings: Option[DataFrame] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val dir = s"$stateDir/curation"
-        val sDir = s"$dir/stream"
-        if (Zone.lastCommittedBatch(spark, sDir).exists(_ >= bid)) ()
-        else {
-          val st = graft.jobs.CorpusJob.loadCurationState(spark, stateDir, cfg)
-          // prior index = immutable bootstrap ∪ this stream's committed
-          // batches (snapshot-isolated at bid)
-          def prior(name: String): Option[DataFrame] = {
-            val boot = Zone.readIfExists(spark, s"$dir/$name")
-            val mine = Zone.readBatchedBefore(spark, s"$sDir/$name", bid)
-            (boot, mine) match {
-              case (Some(b), Some(m)) => Some(b.unionByName(m))
-              case (b, m) => b.orElse(m)
-            }
-          }
-          val out = graft.jobs.CorpusJob.curateCore(batch, cfg, blocked,
-            embeddings, Some(st), Zone.readIfExists(spark, s"$dir/cents"),
-            prior("paras"), prior("shingles"), prior("cells"))
-          Zone.appendBatch(out.annotated, s"$sDir/annotated", bid)
-          Zone.appendBatch(out.newParas, s"$sDir/paras", bid)
-          Zone.appendBatch(out.newShingles, s"$sDir/shingles", bid)
-          out.newCells.foreach(Zone.appendBatch(_, s"$sDir/cells", bid))
-          Zone.markBatchCommitted(spark, sDir, bid)
+      embeddings: Option[DataFrame] = None): StreamingQuery = {
+    val dir = s"$stateDir/curation"
+    val sDir = s"$dir/stream"
+    exactlyOnce(spark, docs, sDir, checkpointDir) { (batch, bid) =>
+      val st = graft.jobs.CorpusJob.loadCurationState(spark, stateDir, cfg)
+      // prior index = immutable bootstrap ∪ this stream's committed
+      // batches (snapshot-isolated at bid)
+      def prior(name: String): Option[DataFrame] = {
+        val boot = Zone.readIfExists(spark, s"$dir/$name")
+        val mine = Zone.readBatchedBefore(spark, s"$sDir/$name", bid)
+        (boot, mine) match {
+          case (Some(b), Some(m)) => Some(b.unionByName(m))
+          case (b, m) => b.orElse(m)
         }
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val out = graft.jobs.CorpusJob.curateCore(batch, cfg, blocked,
+        embeddings, Some(st), Zone.readIfExists(spark, s"$dir/cents"),
+        prior("paras"), prior("shingles"), prior("cells"))
+      Zone.appendBatch(out.annotated, s"$sDir/annotated", bid)
+      Zone.appendBatch(out.newParas, s"$sDir/paras", bid)
+      Zone.appendBatch(out.newShingles, s"$sDir/shingles", bid)
+      out.newCells.foreach(Zone.appendBatch(_, s"$sDir/cells", bid))
+    }
+  }
 
+  /** Streaming training-shard export — the continuous form of the
+    * export family's tail: each micro-batch rides
+    * [[graft.operators.Sharding.continueShards]], continuing the
+    * token cumsum from the persisted cursor so the shard one
+    * micro-batch leaves part-filled keeps filling in the next.
+    * Exactly-once comes from the operator itself, not [[exactlyOnce]]:
+    * the cursor swap is the committed marker (any batch id ≤ the
+    * committed one no-ops — streaming batch ids are monotonic by
+    * construction) and the shard rows write under
+    * `(__batch_id, shard_id)` with dynamic overwrite, so a replay
+    * rewrites its own partitions byte-identically. Same state layout
+    * as the batch path — the two share `stateDir`.
+    */
   def runIncrementalShards(
       spark: SparkSession,
       docs: DataFrame,
@@ -842,17 +759,11 @@ object CorpusStream {
       checkpointDir: String,
       shardTokens: Long,
       salt: String = "shard"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.operators.Sharding.continueShards(
-          spark, batch, stateDir, keyCol, tokensCol, shardTokens,
-          batchId = bid, salt = salt)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(docs, checkpointDir) { (batch, bid) =>
+      graft.operators.Sharding.continueShards(
+        spark, batch, stateDir, keyCol, tokensCol, shardTokens,
+        batchId = bid, salt = salt)
+    }
 
   /** Streaming sequence-packing export — [[runIncrementalShards]]'s
     * twin over [[graft.operators.Sharding.continuePack]]: each
@@ -870,15 +781,9 @@ object CorpusStream {
       checkpointDir: String,
       blockTokens: Long,
       salt: String = "pack"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.operators.Sharding.continuePack(
-          spark, batch, stateDir, keyCol, tokensCol, blockTokens,
-          batchId = bid, salt = salt)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    availableNow(docs, checkpointDir) { (batch, bid) =>
+      graft.operators.Sharding.continuePack(
+        spark, batch, stateDir, keyCol, tokensCol, blockTokens,
+        batchId = bid, salt = salt)
+    }
 }

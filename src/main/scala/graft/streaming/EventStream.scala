@@ -212,25 +212,21 @@ object EventStream {
     * streaming twin of the staging layer's `ON DUPLICATE KEY UPDATE`
     * (SURVEY.md §2.7 U3). `foreachBatch` is the escape hatch for sinks
     * Structured Streaming can't express declaratively (an upsert is
-    * neither append nor complete); the checkpoint still gives
-    * effectively-once: a replayed batch re-merges the same rows onto
-    * the same keys — idempotent by construction (last-writer-wins on
-    * identical input).
+    * neither append nor complete). It runs through plain
+    * [[CorpusStream.availableNow]], not the marker-gated
+    * [[CorpusStream.exactlyOnce]]: a replayed batch re-merges the same
+    * rows onto the same keys — idempotent by construction
+    * (last-writer-wins on identical input).
     */
   def runUpsert(spark: SparkSession, df: DataFrame, tableDir: String,
       checkpointDir: String, key: String, refreshCols: Seq[String],
       orderCol: String): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val existing = graft.sources.Zone.readIfExists(spark, tableDir)
-          .getOrElse(batch.limit(0))
-        val merged = graft.operators.Upsert(
-          existing, batch, key, refreshCols,
-          incomingOrder = Seq(org.apache.spark.sql.functions.col(orderCol).desc))
-        graft.sources.Zone.overwriteInPlace(spark, merged, tableDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    CorpusStream.availableNow(df, checkpointDir) { (batch, _) =>
+      val existing = graft.sources.Zone.readIfExists(spark, tableDir)
+        .getOrElse(batch.limit(0))
+      val merged = graft.operators.Upsert(
+        existing, batch, key, refreshCols,
+        incomingOrder = Seq(org.apache.spark.sql.functions.col(orderCol).desc))
+      graft.sources.Zone.overwriteInPlace(spark, merged, tableDir)
+    }
 }

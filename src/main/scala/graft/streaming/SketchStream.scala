@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.HllSketch
 import graft.sources.Zone
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming sketch maintenance: keep a persisted [[HllSketch]]
   * register table continuously up to date over an event stream — the
@@ -26,23 +26,20 @@ object SketchStream {
 
   /** Start the maintenance query: per micro-batch, sketch the batch and
     * max-merge into the parquet register table at `sketchDir`
-    * (crash-safe swap via [[Zone.overwriteInPlace]]).
+    * (crash-safe swap via [[Zone.overwriteInPlace]]). Plain
+    * [[CorpusStream.availableNow]], no marker gate: the merge is
+    * idempotent.
     */
   def runHllMaintenance(spark: SparkSession, df: DataFrame,
       groupCols: Seq[String], valueCol: String, sketchDir: String,
       checkpointDir: String, p: Int = 8): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = HllSketch.registers(batch, groupCols, valueCol, p)
-        val merged = Zone.readIfExists(spark, sketchDir)
-          .map(existing => HllSketch.merge(existing, b)(groupCols))
-          .getOrElse(b)
-        Zone.overwriteInPlace(spark, merged, sketchDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    CorpusStream.availableNow(df, checkpointDir) { (batch, _) =>
+      val b = HllSketch.registers(batch, groupCols, valueCol, p)
+      val merged = Zone.readIfExists(spark, sketchDir)
+        .map(existing => HllSketch.merge(existing, b)(groupCols))
+        .getOrElse(b)
+      Zone.overwriteInPlace(spark, merged, sketchDir)
+    }
 
   /** Read the maintained store's current estimates. */
   def estimates(spark: SparkSession, sketchDir: String,
@@ -57,33 +54,34 @@ object SketchStream {
     * cells, [[graft.operators.QuantileHistogram]] buckets — any
     * cell-wise-summable table). Unlike HLL's max-merge, addition is
     * not idempotent — a replayed micro-batch would double-count.
-    * Exactly-once comes from the storage layout instead: each
-    * micro-batch's cell table writes to its own `batch=<id>` partition
-    * with `overwrite` — replaying batch N rewrites partition N with
-    * identical content (same input, same deterministic hashes), never
-    * adds. The read side sums cells across partitions
+    * Exactly-once comes from [[CorpusStream.exactlyOnce]] instead: each
+    * micro-batch's cell table lands in its own `__batch_id` partition
+    * ([[Zone.appendBatch]]) — replaying batch N rewrites partition N
+    * with identical content (same input, same deterministic hashes),
+    * never adds — and the `_committed` marker under `sketchRoot` is
+    * written last. The read side sums cells across committed partitions
     * ([[foldAdditive]]) — the merge is deferred to read/compaction,
     * the two standard places a log-structured store folds.
     */
-  def runAdditiveMaintenance(df: DataFrame, sketchRoot: String,
-      checkpointDir: String)(build: DataFrame => DataFrame): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        build(batch).write.mode("overwrite").parquet(s"$sketchRoot/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def runAdditiveMaintenance(spark: SparkSession, df: DataFrame,
+      sketchRoot: String, checkpointDir: String)(
+      build: DataFrame => DataFrame): StreamingQuery =
+    CorpusStream.exactlyOnce(spark, df, sketchRoot, checkpointDir) { (batch, bid) =>
+      Zone.appendBatch(build(batch), sketchRoot, bid)
+    }
 
   /** Current folded cell table of an additive store: sum `sumCol` per
-    * key across batch partitions. Feed to `CountMin.estimate` /
+    * key across COMMITTED batch partitions (reads restrict to
+    * `marker + 1`, so a crash's orphan partition stays invisible until
+    * its replay commits). Feed to `CountMin.estimate` /
     * `QuantileHistogram.quantiles`.
     */
   def foldAdditive(spark: SparkSession, sketchRoot: String,
       keyCols: Seq[String], sumCol: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, sum}
-    spark.read.parquet(s"$sketchRoot/batch=*")
+    val upTo = Zone.lastCommittedBatch(spark, sketchRoot).map(_ + 1).getOrElse(0L)
+    Zone.readBatchedBefore(spark, sketchRoot, upTo)
+      .getOrElse(sys.error(s"no sketch store at $sketchRoot — run maintenance first"))
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col(sumCol)).as(sumCol))
   }
@@ -92,7 +90,7 @@ object SketchStream {
   def runCountMinMaintenance(spark: SparkSession, df: DataFrame,
       groupCols: Seq[String], valueCol: String, sketchRoot: String,
       checkpointDir: String, depth: Int = 4, width: Int = 1024): StreamingQuery =
-    runAdditiveMaintenance(df, sketchRoot, checkpointDir)(
+    runAdditiveMaintenance(spark, df, sketchRoot, checkpointDir)(
       graft.operators.CountMin.sketch(_, groupCols, valueCol, depth, width))
 
   /** Current folded cell table of a Count-Min store. */

@@ -4,26 +4,8 @@ import graft.SparkSpec
 import graft.operators.{Dedup, SubstringDedup}
 import org.apache.spark.sql.functions._
 
-class CorpusStreamSpec extends SparkSpec {
+class CorpusStreamSpec extends SparkSpec with StreamReplay {
   import spark.implicits._
-
-  private def rmrf(p: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
-  }
-
-  /** Simulate a crash after batch `n`'s state appends but BEFORE the
-    * streaming checkpoint committed it: drop the newest checkpoint
-    * commit (so restart replays that batch) and the sink's `_committed`
-    * marker (so the replay cannot take the fast no-op path and must
-    * prove the appends themselves are idempotent).
-    */
-  private def simulateCrashBeforeCommit(ckptDir: String, markerRoot: String): Unit = {
-    val commits = new java.io.File(s"$ckptDir/commits")
-      .listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong)
-    rmrf(s"$ckptDir/commits/${commits.max}")
-    rmrf(s"$markerRoot/_committed")
-  }
 
   /** Row-value MULTISET of a state table (minus bookkeeping columns) —
     * duplicates from a replayed append would change the counts even
@@ -40,6 +22,56 @@ class CorpusStreamSpec extends SparkSpec {
     val df = graft.sources.Zone.readBatched(spark, dir).get
     df.collect().map(r => norm(r)).groupBy(identity)
       .map { case (k, v) => k -> v.size }
+  }
+
+  test("exactlyOnce: a throwing body leaves no marker and replays; batch " +
+      "ids at or below the marker never reach the body") {
+    import graft.sources.Zone
+    import scala.jdk.CollectionConverters._
+    val base = tmpDir("exactlyonce")
+    val (inDir, state) = (s"$base/in", s"$base/state")
+    Seq(1L, 2L).toDF("x").coalesce(1).write.parquet(inDir)
+    Seq(3L).toDF("x").coalesce(1).write.mode("append").parquet(inDir)
+    // the body runs on the driver's stream thread: plain shared state
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    @volatile var failAt: Option[Long] = Some(1L)
+    def start() = CorpusStream.exactlyOnce(spark,
+        spark.readStream.schema("x BIGINT").option("maxFilesPerTrigger", 1)
+          .parquet(inDir), state, s"$base/ckpt") { (batch, bid) =>
+      calls.add(bid)
+      Zone.appendBatch(batch, state, bid)
+      if (failAt.contains(bid)) throw new IllegalStateException(s"crash in $bid")
+    }
+    def seen = calls.asScala.toList
+    def rows = Zone.readBatched(spark, state).get.as[Long].collect().sorted.toList
+
+    // batch 1's body throws after its append: no marker for it
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      start().awaitTermination()
+    }
+    assert(seen == List(0L, 1L))
+    assert(Zone.lastCommittedBatch(spark, state).contains(0L))
+
+    // the restart replays batch 1 through the body; its partition
+    // rewrites itself, so no row doubles
+    failAt = None
+    start().awaitTermination()
+    assert(seen == List(0L, 1L, 1L))
+    assert(Zone.lastCommittedBatch(spark, state).contains(1L))
+    assert(rows == List(1L, 2L, 3L))
+
+    // a replayed batch AT the marker never calls the body
+    dropNewestCommit(s"$base/ckpt")
+    start().awaitTermination()
+    assert(seen == List(0L, 1L, 1L))
+
+    // nor does a new batch BELOW it (marker ahead of the checkpoint)
+    Zone.markBatchCommitted(spark, state, 5L)
+    Seq(4L).toDF("x").coalesce(1).write.mode("append").parquet(inDir)
+    start().awaitTermination()
+    assert(seen == List(0L, 1L, 1L))
+    assert(Zone.lastCommittedBatch(spark, state).contains(5L))
+    assert(rows == List(1L, 2L, 3L))
   }
 
   test("streamed increments produce exactly the batch pair set; index accumulates") {
@@ -135,6 +167,17 @@ class CorpusStreamSpec extends SparkSpec {
     assert(idx.select("id").distinct().count() == corpus.count())
     assert(idx.count() == corpus.count() * 4)
     assert(idx.columns.toSet == Set("id", "sim", "chunk", "chunk_val"))
+
+    // exactly-once: kill-and-replay the newest batch with the marker
+    // gone — pair log and index value-identical including duplicate counts
+    val before = Seq(s"$base/pairs", s"$base/index").map(multiset)
+    simulateCrashBeforeCommit(s"$base/ckpt", s"$base/index")
+    CorpusStream.runIncrementalSimHash(spark, spark.readStream
+        .schema(corpus.schema).option("maxFilesPerTrigger", 1).parquet(inDir),
+      "text", "doc_id", s"$base/index", s"$base/pairs", s"$base/ckpt")
+      .awaitTermination()
+    assert(Seq(s"$base/pairs", s"$base/index").map(multiset) == before,
+      "kill-and-replay changed state tables")
   }
 
   test("streaming BM25 index: probe == one-shot search; kill-and-replay " +
@@ -210,6 +253,20 @@ class CorpusStreamSpec extends SparkSpec {
     start().awaitTermination()
     assert(multiset(s"$base/index/codes") == before,
       "kill-and-replay changed the codes table")
+
+    // the codebook is frozen: a restart with a differently trained one
+    // refuses before touching state (it would redefine every code)
+    val cb2 = graft.operators.Pq.train(emb.filter($"vec_id" % 2 === 0),
+      "vec_id", "embedding", 8, 16)
+    assert(cb2 != cb)
+    intercept[IllegalArgumentException] {
+      CorpusStream.runIncrementalPqCodes(spark,
+        spark.readStream.schema(emb.schema).parquet(inDir),
+        "embedding", "vec_id", cb2, s"$base/index", s"$base/ckpt")
+    }
+    assert(graft.operators.Pq.codebookFromDf(
+      spark.read.parquet(s"$base/index/codebook")) == cb)
+    assert(multiset(s"$base/index/codes") == before)
   }
 
   test("streaming spans: monotonic micro-batches == one-shot span set; replay idempotent") {
@@ -304,9 +361,7 @@ class CorpusStreamSpec extends SparkSpec {
     // kill-and-replay the newest batch: the cursor marker short-circuits
     // and the dynamic-overwrite partitions rewrite byte-identically
     val before = multiset(s"$base/state/shards")
-    val commits = new java.io.File(s"$base/ckpt/commits")
-      .listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong)
-    rmrf(s"$base/ckpt/commits/${commits.max}")
+    dropNewestCommit(s"$base/ckpt")
     val q2 = CorpusStream.runIncrementalShards(spark, spark.readStream
         .schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(inDir),
       "doc_id", "n_tokens", s"$base/state", s"$base/ckpt", budget)
@@ -353,9 +408,7 @@ class CorpusStreamSpec extends SparkSpec {
     assert(got == reference)
 
     val before = multiset(s"$base/state/packed")
-    val commits = new java.io.File(s"$base/ckpt/commits")
-      .listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong)
-    rmrf(s"$base/ckpt/commits/${commits.max}")
+    dropNewestCommit(s"$base/ckpt")
     val q2 = CorpusStream.runIncrementalPack(spark, spark.readStream
         .schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(inDir),
       "doc_id", "n_tokens", s"$base/state", s"$base/ckpt", b)
@@ -366,8 +419,13 @@ class CorpusStreamSpec extends SparkSpec {
 
   test("streaming embedding increments == batch LSH pair set; two-table index accumulates") {
     val base = tmpDir("embstream")
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val emb0 = graft.Tables.embeddings(spark, sfDir())
       .select("vec_id", "embedding")
+    // plant exact copies of a few vectors under fresh ids (landing in
+    // other slices than their originals): the fixture's vectors are
+    // near-orthogonal, and without these the pair log stays empty
+    val emb = emb0.unionByName(emb0.filter($"vec_id" < 12)
+      .withColumn("vec_id", $"vec_id" + 1000000L))
     val inDir = s"$base/in"
     emb.filter($"vec_id" % 3 === 0).write.parquet(inDir)
     emb.filter($"vec_id" % 3 === 1).write.mode("append").parquet(inDir)
@@ -392,11 +450,23 @@ class CorpusStreamSpec extends SparkSpec {
     val batch = key(Dedup.embeddingNearDupLsh(emb, "embedding", "vec_id",
       minCosine = 0.5, dim = 64))
     assert(streamed == batch, s"streamed=${streamed.size} batch=${batch.size}")
+    assert(batch.nonEmpty, "the planted copies must pair")
 
     val buckets = spark.read.parquet(s"$base/index/buckets")
     assert(buckets.select("id").distinct().count() == emb.count())
     assert(!buckets.columns.contains("qv"), "bucket index must stay narrow")
     assert(spark.read.parquet(s"$base/index/vecs").count() == emb.count())
+
+    // exactly-once: kill-and-replay the newest batch with the marker
+    // gone — pair log and both index tables value-identical
+    val tables = Seq(s"$base/pairs", s"$base/index/vecs", s"$base/index/buckets")
+    val before = tables.map(multiset)
+    simulateCrashBeforeCommit(s"$base/ckpt", s"$base/index")
+    CorpusStream.runIncrementalEmbeddingNearDup(spark, spark.readStream
+        .schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(inDir),
+      "embedding", "vec_id", s"$base/index", s"$base/pairs", s"$base/ckpt",
+      dim = 64, minCosine = 0.5).awaitTermination()
+    assert(tables.map(multiset) == before, "kill-and-replay changed state tables")
   }
 
   test("streaming IVF maintenance: cells == frozen-codebook batch assignment; probe works") {

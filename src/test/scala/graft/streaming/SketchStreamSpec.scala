@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.operators.HllSketch
 import org.apache.spark.sql.functions._
 
-class SketchStreamSpec extends SparkSpec {
+class SketchStreamSpec extends SparkSpec with StreamReplay {
   import spark.implicits._
 
   test("streamed sketch == one-shot batch sketch; idempotent under replay") {
@@ -48,11 +48,11 @@ class SketchStreamSpec extends SparkSpec {
     day1.toDF("g", "k").repartition(1).write.parquet(in)
     day2.toDF("g", "k").repartition(1).write.mode("append").parquet(in)
 
-    val stream = spark.readStream.schema("g STRING, k BIGINT")
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = SketchStream.runCountMinMaintenance(spark, stream, Seq("g"), "k",
-      s"$base/cm", s"$base/ckpt")
-    q.awaitTermination()
+    def start() = SketchStream.runCountMinMaintenance(spark,
+      spark.readStream.schema("g STRING, k BIGINT")
+        .option("maxFilesPerTrigger", 1).parquet(in),
+      Seq("g"), "k", s"$base/cm", s"$base/ckpt")
+    start().awaitTermination()
 
     val all = (day1 ++ day2).toDF("g", "k")
     val folded = SketchStream.countMinCells(spark, s"$base/cm", Seq("g"))
@@ -60,13 +60,15 @@ class SketchStreamSpec extends SparkSpec {
     assert(folded.orderBy("row", "bucket").collect().toSeq ==
       direct.orderBy("row", "bucket").collect().toSeq)
 
-    // replay of a batch = overwrite of its partition → store unchanged
-    // (rebuild batch 0's cell table from collected rows — a replayed
-    // micro-batch produces identical deterministic content)
-    val b0 = spark.read.parquet(s"$base/cm/batch=0")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
-    b0.toDF("g", "row", "bucket", "cell_count")
-      .write.mode("overwrite").parquet(s"$base/cm/batch=0")
+    // crash after the newest batch's cells landed but before its
+    // checkpoint commit and marker: the restart replays it, and the
+    // replay overwrites its own __batch_id partition → store unchanged
+    def marker = graft.sources.Zone.lastCommittedBatch(spark, s"$base/cm")
+    assert(marker.contains(1L))
+    simulateCrashBeforeCommit(s"$base/ckpt", s"$base/cm")
+    assert(marker.isEmpty)
+    start().awaitTermination()
+    assert(marker.contains(1L), "the restart must replay and commit batch 1")
     val after = SketchStream.countMinCells(spark, s"$base/cm", Seq("g"))
     assert(after.orderBy("row", "bucket").collect().toSeq ==
       direct.orderBy("row", "bucket").collect().toSeq)
@@ -83,7 +85,8 @@ class SketchStreamSpec extends SparkSpec {
 
     val stream = spark.readStream.schema("g STRING, v BIGINT")
       .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = SketchStream.runAdditiveMaintenance(stream, s"$base/qh", s"$base/ckpt")(
+    val q = SketchStream.runAdditiveMaintenance(spark, stream, s"$base/qh",
+      s"$base/ckpt")(
       QuantileHistogram.histogram(_, Seq("g"), col("v"), width = 10L))
     q.awaitTermination()
 
