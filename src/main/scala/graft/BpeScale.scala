@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Production-vocabulary BPE demonstration: one
@@ -21,19 +20,9 @@ import org.apache.spark.sql.functions._
 object BpeScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.localCores
     val merges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "32768").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-plan CACHED frames too: a persisted bounded frame
-      // otherwise pins its pre-AQE 32-partition layout and every
-      // downstream stage pays a full task wave over dozens of rows
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one md5-derived "word" per corpus token occurrence: rich pair
     // statistics over a 16-symbol alphabet, deterministic. Hex digits

@@ -4,27 +4,52 @@ import graft.control.SessionDefaults
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
-/** The library's front door: a SparkSession builder with the graft SQL
-  * functions registered (the [[graft.plans.GraftExtensions]] catalog:
-  * `graft_dotq`/`graft_dotd`/`graft_eq_count`/`graft_h60`/
-  * `graft_quantize`/`graft_cdc_chunks`/`graft_shingle_h60`/
-  * `graft_image_header`/`graft_av_header`/`graft_nfc`) and the
-  * cluster-scale sizing defaults applied — what a user switching from
-  * the reference stack starts from.
+/** The library's front door: every SparkSession the engine builds
+  * starts here, with the graft SQL functions installed as a session
+  * extension (the [[graft.plans.GraftExtensions.descriptors]] catalog).
+  *
+  *  - [[builder]] is the cluster entry: the
+  *    [[graft.control.SessionDefaults]] sizing rules on top.
+  *  - [[local]] is the pinned single-JVM session the mains and the test
+  *    suite run on, so what they measure is what production builds.
   *
   * {{{
   * val spark = GraftSession.builder(totalCores = 4000, largestTableGB = 102400)
   *   .master(...)            // or spark-submit supplies it
   *   .getOrCreate()
+  * val dev = GraftSession.local(GraftSession.localCores).getOrCreate()
   * }}}
-  *
-  * The test/bench mains build their own pinned local sessions and call
-  * [[graft.plans.GraftExtensions.register]] directly — this builder is
-  * the production path.
   */
 object GraftSession {
+  private def base: SparkSession.Builder =
+    SparkSession.builder().withExtensions(new GraftExtensions)
+
   def builder(totalCores: Int, largestTableGB: Long): SparkSession.Builder =
-    SessionDefaults.configure(
-      SparkSession.builder().withExtensions(new GraftExtensions),
-      totalCores, largestTableGB)
+    SessionDefaults.configure(base, totalCores, largestTableGB)
+
+  /** `local[cores]` with one shuffle partition per core, UTC session
+    * time, ns parquet timestamps read as longs (`events.parquet`;
+    * `Tables.events` converts them), and no UI.
+    */
+  def local(cores: Int): SparkSession.Builder = base
+    .master(s"local[$cores]")
+    .config("spark.sql.shuffle.partitions", cores)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // let AQE re-plan CACHED frames too: a persisted bounded frame
+    // otherwise pins its pre-AQE wide layout and every downstream
+    // stage pays a full task wave over dozens of rows
+    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    .config("spark.ui.enabled", "false")
+
+  /** `SPARK_GRAFT_CPUS`, or every available processor when unset. */
+  def localCores: Int = parseCores(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCores(env: Option[String]): Int = env match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) =>
+      val n = v.trim.toIntOption
+      require(n.exists(_ > 0), s"SPARK_GRAFT_CPUS must be an integer > 0, got '$v'")
+      n.get
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the plan dumps in PLANS.md: prints the executed plan of
   * each named query (all of `SparkEntry.queries` if no names given) on
   * sf0.001. Usage:
@@ -26,20 +24,11 @@ object PlanDump {
     val formatted = flags.contains("--formatted")
     val rest = positional.filterNot(_ == sfDir).toSeq
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-plan CACHED frames too: a persisted bounded frame
-      // otherwise pins its pre-AQE 32-partition layout and every
-      // downstream stage pays a full task wave over dozens of rows
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // pinned at 4 cores: the PLANS.md dumps show 4-partition plans
+    val spark = GraftSession.local(4)
       .config("spark.sql.maxMetadataStringLength", 200)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"\n## $name\n")

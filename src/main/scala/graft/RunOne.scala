@@ -1,31 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Debug surface: run ONE SparkEntry query by name against an SF dir —
   * count, time, optionally dump the formatted physical plan. Saves a
   * full Verify/Bench cycle when iterating on a single operator.
   *
-  * sbt "runMain graft.RunOne q55_dedup_clusters /root/testdata/sf0.1 explain"
+  * sbt "runMain graft.RunOne q55_dedup_clusters [sfDir] [explain]"
   */
 object RunOne {
+  /** `(name, sfDir, explain)`: sfDir is the first argument after the
+    * name that is not the `explain` flag, so `q55 explain` alone keeps
+    * the default data directory.
+    */
+  private[graft] def parseArgs(args: Array[String]): (String, String, Boolean) = {
+    require(args.nonEmpty, "usage: RunOne <query> [sfDir] [explain]")
+    val rest = args.tail
+    (args.head, rest.find(_ != "explain").getOrElse("/root/testdata/sf0.01"),
+      rest.contains("explain"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val explain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-plan CACHED frames too: a persisted bounded frame
-      // otherwise pins its pre-AQE 32-partition layout and every
-      // downstream stage pays a full task wave over dozens of rows
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val (name, sfDir, explain) = parseArgs(args)
+    val spark = GraftSession.local(GraftSession.localCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
     // SPARK_GRAFT_JOB_TRACE=1: one stderr line per Spark job (wall,
     // stage/task counts) — the guide §1 "where does the time go" probe
     // for operators whose cost is a chain of driver-blocking jobs

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{BpeVocab, Dedup, DedupCluster, SubstringDedup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up evidence run: the heavy operator families (substring-span
@@ -31,21 +31,10 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.localCores
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-plan CACHED frames too: a persisted bounded frame
-      // otherwise pins its pre-AQE 32-partition layout and every
-      // downstream stage pays a full task wave over dozens of rows
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
 
     // Two replication modes (SPARK_GRAFT_SCALE_MODE):
     //  - "neardup" (default, the SCALE_r9 semantics): replicas differ

@@ -5,10 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Cluster-scale session defaults — the sizing rules this engine
   * assumes, in one place instead of scattered across submit scripts.
   *
-  * The local test mains (Verify/Bench/PlanDump) intentionally pin their
-  * own tiny configs; this builder is the production entry for a real
-  * cluster, derived from two inputs that actually matter:
-  * total executor cores and the largest table's size.
+  * These are the production settings for a real cluster (applied by
+  * [[graft.GraftSession.builder]]), derived from two inputs that
+  * actually matter: total executor cores and the largest table's size.
   *
   *  - `shuffle.partitions`: ~2 partitions per core, floored at the
   *    count that keeps a full-table shuffle under ~`targetPartitionMB`

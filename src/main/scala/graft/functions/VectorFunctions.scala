@@ -95,8 +95,4 @@ object VectorFunctions {
       .otherwise(dotQ(qa, qb).cast("double") /
         (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double"))))
 
-  /** Squared euclidean distance. */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
-
 }

@@ -157,15 +157,6 @@ object CharLm {
     }.toMap
   }
 
-  /** [[fit]] from maintained count tables (the incremental form). */
-  def fitFromCounts(counts3: DataFrame, counts2: DataFrame,
-      dim3: Int, dim2: Int): Model = {
-    val c3 = Dsir.toDense(counts3, dim3)
-    val c2 = Dsir.toDense(counts2, dim2)
-    Model(IndexedSeq.tabulate(dim3)(b => Dsir.log2Fp(c3(b) + 1)),
-      IndexedSeq.tabulate(dim2)(b => Dsir.log2Fp(c2(b) + dim3)))
-  }
-
   /** `df` + `n_tri` (trigram-window count; NULL text → NULL) +
     * `lm_score` (fixed-point `Σ log2 p̂`; NULL text → NULL, < 3 chars
     * → 0) — one narrow kernel pass over `lower(text)`.

@@ -83,12 +83,6 @@ object PortableBloom {
   def posFromHash(i: Int, h: Column, m: Int): Column =
     ((lit(bloomA(i)) * h + lit(bloomB(i))) % lit(AuditableHash.P)) % lit(m.toLong)
 
-  /** [[posFromHash]] over a raw value column (hashes inline — the
-    * one-off form; hot paths pre-project [[AuditableHash.base30]]).
-    */
-  def bitPos(i: Int, v: Column, m: Int): Column =
-    posFromHash(i, AuditableHash.base30(v), m)
-
   /** The geometry tag [[sketch]] stamps on the `bits` column — (m, k)
     * as column METADATA, so it rides the frame through select/filter
     * and parquet round-trips without changing the data (the gate

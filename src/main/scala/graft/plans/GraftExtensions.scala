@@ -2,8 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Session extension registering graft's native expressions with the
   * SQL function registry, so `spark.sql("SELECT graft_dotq(a, b)")`
@@ -20,94 +19,56 @@ object GraftExtensions {
   private type Descriptor =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
+  private def descriptor(name: String, clazz: Class[_])(
+      build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), build)
+
+  private def unary(name: String, clazz: Class[_],
+      make: Expression => Expression): Descriptor =
+    descriptor(name, clazz) { children =>
+      require(children.length == 1, s"$name takes exactly 1 argument")
+      make(children.head)
+    }
+
   private def binary(name: String, clazz: Class[_],
-      make: (Expression, Expression) => Expression): Descriptor = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(clazz.getName, name),
-    (children: Seq[Expression]) => {
+      make: (Expression, Expression) => Expression): Descriptor =
+    descriptor(name, clazz) { children =>
       require(children.length == 2, s"$name takes exactly 2 arguments")
       make(children.head, children(1))
-    })
+    }
+
+  /** `name(text, k)` with `k` an int literal. */
+  private def withIntK(name: String, clazz: Class[_],
+      make: (Expression, Int) => Expression): Descriptor =
+    descriptor(name, clazz) { children =>
+      require(children.length == 2, s"$name takes (text, k)")
+      make(children.head, intLit(children(1), "k"))
+    }
+
+  private def intLit(e: Expression, name: String): Int = e match {
+    case Literal(v: Int, _) => v
+    case _ => throw new IllegalArgumentException(s"$name must be an int literal")
+  }
 
   val descriptors: Seq[Descriptor] = Seq(
-    binary("graft_dotq", classOf[LongArrayDot], LongArrayDot.apply),
-    binary("graft_dotd", classOf[DoubleArrayDot], DoubleArrayDot.apply),
-    binary("graft_eq_count", classOf[LongArrayEqCount], LongArrayEqCount.apply),
-    (FunctionIdentifier("graft_h60"),
-      new ExpressionInfo(classOf[Md5Prefix60].getName, "graft_h60"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_h60 takes exactly 1 argument")
-        Md5Prefix60(children.head)
-      }),
-    (FunctionIdentifier("graft_quantize"),
-      new ExpressionInfo(classOf[QuantizeVec].getName, "graft_quantize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_quantize takes exactly 1 argument")
-        QuantizeVec(children.head)
-      }),
-    (FunctionIdentifier("graft_cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "graft_cdc_chunks takes (text, w, avgSize)")
-        def intLit(e: Expression, name: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case _ => throw new IllegalArgumentException(s"$name must be an int literal")
-        }
-        CdcChunks(children.head, intLit(children(1), "w"), intLit(children(2), "avgSize"))
-      }),
-    (FunctionIdentifier("graft_shingle_h60"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_h60"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_shingle_h60 takes (text, k)")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case _ => throw new IllegalArgumentException("k must be an int literal")
-        }
-        ShingleHashes(children.head, k)
-      }),
-    (FunctionIdentifier("graft_image_header"),
-      new ExpressionInfo(classOf[ImageHeader].getName, "graft_image_header"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_image_header takes exactly 1 argument")
-        ImageHeader(children.head)
-      }),
-    (FunctionIdentifier("graft_av_header"),
-      new ExpressionInfo(classOf[AvHeader].getName, "graft_av_header"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_av_header takes exactly 1 argument")
-        AvHeader(children.head)
-      }),
-    (FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_nfc takes exactly 1 argument")
-        NfcNormalize(children.head)
-      }),
-    (FunctionIdentifier("graft_char_ngrams"),
-      new ExpressionInfo(classOf[CharNgramHashes].getName, "graft_char_ngrams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_char_ngrams takes (text, k)")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case _ => throw new IllegalArgumentException("k must be an int literal")
-        }
-        CharNgramHashes(children.head, k)
-      }),
-    (FunctionIdentifier("graft_strip_html"),
-      new ExpressionInfo(classOf[HtmlStrip].getName, "graft_strip_html"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_strip_html takes exactly 1 argument")
-        HtmlStrip(children.head)
-      }),
-    (FunctionIdentifier("graft_log2fp"),
-      new ExpressionInfo(classOf[Log2Fp].getName, "graft_log2fp"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_log2fp takes exactly 1 argument")
-        Log2Fp(children.head)
-      }))
+    binary("graft_dotq", classOf[LongArrayDot], LongArrayDot(_, _)),
+    binary("graft_dotd", classOf[DoubleArrayDot], DoubleArrayDot(_, _)),
+    binary("graft_eq_count", classOf[LongArrayEqCount], LongArrayEqCount(_, _)),
+    unary("graft_h60", classOf[Md5Prefix60], Md5Prefix60(_)),
+    unary("graft_quantize", classOf[QuantizeVec], QuantizeVec(_)),
+    descriptor("graft_cdc_chunks", classOf[CdcChunks]) { children =>
+      require(children.length == 3, "graft_cdc_chunks takes (text, w, avgSize)")
+      CdcChunks(children.head, intLit(children(1), "w"), intLit(children(2), "avgSize"))
+    },
+    withIntK("graft_shingle_h60", classOf[ShingleHashes], ShingleHashes(_, _)),
+    unary("graft_image_header", classOf[ImageHeader], ImageHeader(_)),
+    unary("graft_av_header", classOf[AvHeader], AvHeader(_)),
+    unary("graft_nfc", classOf[NfcNormalize], NfcNormalize(_)),
+    withIntK("graft_char_ngrams", classOf[CharNgramHashes], CharNgramHashes(_, _)),
+    unary("graft_strip_html", classOf[HtmlStrip], HtmlStrip(_)),
+    unary("graft_log2fp", classOf[Log2Fp], Log2Fp(_)))
 
-  /** Register on an already-built session (tests, Verify/Bench mains). */
+  /** Register on an already-built session (the frozen Bench main). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     descriptors.foreach(d =>
       spark.sessionState.functionRegistry.registerFunction(d._1, d._2, d._3))

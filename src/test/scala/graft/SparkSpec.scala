@@ -4,17 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (session startup is
-  * ~5s; per-suite sessions would dominate test time).
+  * ~5s; per-suite sessions would dominate test time), built by the same
+  * [[GraftSession.local]] factory the mains use.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.local(4).appName("graft-test").getOrCreate()
   spark // touch so logLevel applies on first use
   def init(): SparkSession = { spark.sparkContext.setLogLevel("WARN"); spark }
 }

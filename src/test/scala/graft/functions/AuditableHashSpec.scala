@@ -58,7 +58,6 @@ class AuditableHashSpec extends SparkSpec {
     try { spark.conf.set(key, "NO_CODEGEN"); check() } // interpreted path
     finally spark.conf.set(key, old)
     // SQL surface
-    graft.plans.GraftExtensions.register(spark)
     assert(spark.sql("SELECT graft_h60('abc') AS h").as[Long].head() ==
       648541476951500027L)
   }

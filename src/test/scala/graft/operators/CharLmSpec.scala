@@ -198,7 +198,6 @@ class CharLmSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_char_ngrams(text, k)") {
-    graft.plans.GraftExtensions.register(spark)
     val got = spark.sql(
       "SELECT graft_char_ngrams('abc', 2) AS h").collect().head.getSeq[Long](0)
     assert(got == Seq("ab", "bc").map(graft.functions.AuditableHash.h60))

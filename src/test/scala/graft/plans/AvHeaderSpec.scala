@@ -108,7 +108,6 @@ class AvHeaderSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_av_header(blob)") {
-    GraftExtensions.register(spark)
     Seq((1L, wavBytes(2, 16000, 64000, 64000))).toDF("id", "blob")
       .createOrReplaceTempView("av_t")
     val r = spark.sql(

@@ -109,7 +109,6 @@ class HtmlStripSpec extends SparkSpec {
   test("null propagates; SQL registration") {
     val df = Seq((1L, null.asInstanceOf[String])).toDF("id", "text")
     assert(df.select(T.stripHtml($"text")).head().isNullAt(0))
-    GraftExtensions.register(spark)
     df.createOrReplaceTempView("hs_t")
     assert(spark.sql("SELECT graft_strip_html('a<b>c</b>') AS s").head().getString(0)
       == "a c")

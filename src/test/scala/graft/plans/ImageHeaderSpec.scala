@@ -88,7 +88,6 @@ class ImageHeaderSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_image_header(blob)") {
-    GraftExtensions.register(spark)
     Seq((1L, realPng)).toDF("id", "blob").createOrReplaceTempView("ih_t")
     val r = spark.sql(
       "SELECT graft_image_header(blob).width AS w, graft_image_header(blob).format AS f FROM ih_t")

@@ -37,7 +37,6 @@ class Log2FpSpec extends SparkSpec {
   }
 
   test("registered SQL surface") {
-    GraftExtensions.register(spark)
     val r = spark.sql("SELECT graft_log2fp(1024L) AS r").head.getLong(0)
     assert(r == 10L << 10)
   }

@@ -48,7 +48,6 @@ class LongArrayDotSpec extends SparkSpec {
   }
 
   test("SQL surface via extension registration: graft_dotq/_dotd/_quantize") {
-    GraftExtensions.register(spark)
     val r = spark.sql("SELECT graft_dotq(array(1L,2L), array(3L,4L)) AS d").head()
     assert(r.getLong(0) == 11L)
     val rd = spark.sql("SELECT graft_dotd(array(0.5D,2.0D), array(4.0D,3.0D)) AS d").head()

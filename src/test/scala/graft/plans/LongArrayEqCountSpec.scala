@@ -40,7 +40,6 @@ class LongArrayEqCountSpec extends SparkSpec {
   }
 
   test("registered SQL surface and codegen path") {
-    GraftExtensions.register(spark)
     val n = spark.sql(
       "SELECT graft_eq_count(array(1L,2L,3L), array(1L,5L,3L)) AS n").head.getInt(0)
     assert(n == 2)

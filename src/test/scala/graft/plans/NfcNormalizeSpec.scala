@@ -46,7 +46,6 @@ class NfcNormalizeSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_nfc(text)") {
-    GraftExtensions.register(spark)
     Seq((1L, combining)).toDF("id", "text").createOrReplaceTempView("nfc_t")
     assert(spark.sql("SELECT graft_nfc(text) AS n FROM nfc_t").head().getString(0)
       == composed)

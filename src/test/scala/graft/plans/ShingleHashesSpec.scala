@@ -59,7 +59,6 @@ class ShingleHashesSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_shingle_h60(text, k)") {
-    GraftExtensions.register(spark)
     Seq((1L, "x y z w")).toDF("doc_id", "text").createOrReplaceTempView("sh_t")
     val out = spark.sql(
       "SELECT graft_shingle_h60(text, 3) AS hs FROM sh_t")
