@@ -1,10 +1,19 @@
 package graft.control
 
 import graft.model.Schemas
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 import java.sql.{Date, Timestamp}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Control plane: audit trail + gates, the Spark re-expression of the
   * reference's `db_control` (`extract/create_control_db_v5.sql`,
@@ -12,9 +21,14 @@ import java.sql.{Date, Timestamp}
   * Running→Success/Failed rows with row counts; downstream jobs gate on
   * them (J3) and skip already-succeeded logical dates (A5).
   *
-  * Storage is an append-only parquet directory; log_id is a
-  * timestamp-derived long (uniqueness per (process, date, attempt) is
-  * what the reference actually relies on, not density).
+  * Storage is an append-only parquet directory holding one one-row
+  * file per [[append]], written on the driver (no Spark job) under a
+  * hidden `_tmp-<uuid>.parquet` name and then renamed to
+  * `part-<uuid>.parquet`: readers never list a partial file, and a crash
+  * mid-append leaves only an ignored temp. Older Spark-written rows
+  * (INT96 timestamps) read alongside through the pinned schema. log_id
+  * is a timestamp-derived long (uniqueness per (process, date, attempt)
+  * is what the reference actually relies on, not density).
   */
 final class Audit(spark: SparkSession, auditDir: String, clock: () => Timestamp) {
 
@@ -39,17 +53,27 @@ final class Audit(spark: SparkSession, auditDir: String, clock: () => Timestamp)
       rowsProcessed: Option[Long], startTime: Timestamp,
       errorMessage: Option[String] = None): Unit = {
     val end = clock()
-    val row = Row(
-      end.getTime * 100000L + seq.getAndIncrement(),
-      processName, executionDate, status,
-      rowsProcessed.map(Long.box).orNull, startTime, end,
+    val row = new SimpleGroupFactory(Audit.FileSchema).newGroup()
+      .append("log_id", end.getTime * 100000L + seq.getAndIncrement())
+      .append("process_name", processName)
+      .append("execution_date", DateTimeUtils.fromJavaDate(executionDate))
+      .append("status", status)
+      .append("start_time", DateTimeUtils.fromJavaTimestamp(startTime))
+      .append("end_time", DateTimeUtils.fromJavaTimestamp(end))
       // generated column duration_seconds (F11,
       // `create_control_db_v5.sql:47`): computed at write
-      Long.box((end.getTime - startTime.getTime) / 1000L),
-      errorMessage.orNull)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(row), 1), Schemas.auditLog)
-      .write.mode("append").parquet(auditDir)
+      .append("duration_seconds", (end.getTime - startTime.getTime) / 1000L)
+    rowsProcessed.foreach(row.append("rows_processed", _))
+    errorMessage.foreach(row.append("error_message", _))
+    val id = java.util.UUID.randomUUID()
+    val tmp = new Path(auditDir, s"_tmp-$id.parquet")
+    val part = new Path(auditDir, s"part-$id.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(tmp).withConf(conf).withType(Audit.FileSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(Audit.FileMetadata).build()
+    try w.write(row) finally w.close()
+    require(tmp.getFileSystem(conf).rename(tmp, part), s"audit append rename failed: $tmp -> $part")
   }
 
   /** Readiness gate (J3): `is_process_done_procedure` —
@@ -143,4 +167,45 @@ final class Audit(spark: SparkSession, auditDir: String, clock: () => Timestamp)
       .select(col("process_name"), col("execution_date"), col("status"),
         col("rows_processed"), col("duration_seconds"))
       .orderBy(col("process_name"))
+}
+
+object Audit {
+
+  /** [[Schemas.auditLog]] as the audit files store it: timestamps as
+    * UTC-adjusted INT64 micros, which a schema-less read infers back as
+    * `TimestampType`.
+    */
+  private val FileSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required int64 log_id;
+      |  required binary process_name (STRING);
+      |  required int32 execution_date (DATE);
+      |  required binary status (STRING);
+      |  optional int64 rows_processed;
+      |  optional int64 start_time (TIMESTAMP(MICROS,true));
+      |  optional int64 end_time (TIMESTAMP(MICROS,true));
+      |  optional int64 duration_seconds;
+      |  optional binary error_message (STRING);
+      |}""".stripMargin)
+
+  /** The footer keys Spark's own writer sets: the Catalyst schema, and
+    * the writer version that marks dates and timestamps as proleptic
+    * Gregorian (no calendar rebase on read).
+    */
+  private val FileMetadata = Map(
+    "org.apache.spark.sql.parquet.row.metadata" -> Schemas.auditLog.json,
+    "org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT).asJava
+
+  /** `df` with a row counter riding its plan, and a thunk that returns
+    * how many rows flowed through `df` during the first action that ran
+    * it: an audit count taken from the write itself instead of a second
+    * job over its output. Call the thunk only after that action; its
+    * wait is bounded, so metrics that never arrive fail the bracket
+    * instead of hanging it.
+    */
+  def rowCount(df: DataFrame): (DataFrame, () => Long) = {
+    val obs = Observation()
+    (df.observe(obs, count(lit(1)).as("rows")),
+      () => Await.result(obs.future, 5.minutes).getLong(0))
+  }
 }

@@ -1,5 +1,7 @@
 package graft.jobs
 
+import graft.model.Schemas
+import graft.sources.Zone
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,11 +23,14 @@ object Dashboard {
 
   /** Chart frames keyed by mart name; `topN` keeps the payload
     * driver-safe (TakeOrderedAndProject — never a full collect of an
-    * unbounded mart).
+    * unbounded mart). Marts are read through [[Zone.readIfExists]] with
+    * their schema pinned: one job per chart, and a mart whose
+    * [[DataMartJob]] swap was cut short is promoted before the read.
     */
   def chartData(spark: SparkSession, martDir: String, topN: Int = 20): Map[String, DataFrame] =
     Charts.map { case (table, groupCol, valueCol) =>
-      table -> spark.read.parquet(s"$martDir/$table")
+      table -> Zone.readIfExists(spark, s"$martDir/$table", Schemas.referenceMart(groupCol))
+        .getOrElse(sys.error(s"mart $table missing under $martDir — run DataMartJob first"))
         .select(col(groupCol), col(valueCol))
         .orderBy(col(valueCol).desc, col(groupCol))
         .limit(topN)

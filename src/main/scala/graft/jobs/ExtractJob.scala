@@ -28,10 +28,12 @@ object ExtractJob {
       val expected = Schemas.rawScrape.fieldNames.toSet
       require(feed.columns.toSet == expected,
         s"feed schema mismatch: got ${feed.columns.toSet}, want $expected")
-      val batch = feed
-        .filter(col("source_id") === sourceId && col("extracted_date") === date)
+      // the dynamic overwrite replaces exactly this partition, so the
+      // rows written are the partition's rows: counted as they land
+      val (batch, written) = Audit.rowCount(feed
+        .filter(col("source_id") === sourceId && col("extracted_date") === date))
       RawZone.write(batch, rawDir)
-      RawZone.readPartition(spark, rawDir, sourceId, date).count()
+      written()
     }
   }
 }

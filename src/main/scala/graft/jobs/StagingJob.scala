@@ -2,6 +2,7 @@ package graft.jobs
 
 import graft.control.Audit
 import graft.functions.{CleaningFunctions => C}
+import graft.model.Schemas
 import graft.operators.{LatestPerKey, Upsert}
 import graft.sources.RawZone
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -97,15 +98,16 @@ object StagingJob {
       // batch could upsert a different survivor)
       val latest = LatestPerKey(cleaned, Seq("job_id"),
         Seq(col("extracted_ts").desc,
-          xxhash64(cleaned.columns.map(col).toIndexedSeq: _*).desc)).cache()
-      val batchRows = latest.count() // rows processed THIS run (audit metric)
-      val existing = graft.sources.Zone.readIfExists(spark, stagingDir)
+          xxhash64(cleaned.columns.map(col).toIndexedSeq: _*).desc))
+      val existing = graft.sources.Zone.readIfExists(spark, stagingDir, Schemas.stagingJob)
         .getOrElse(latest.limit(0))
-      val merged = Upsert(existing, latest, "job_id", RefreshCols,
+      // rows processed THIS run (audit metric), counted as the upsert
+      // consumes them
+      val (incoming, batchRows) = Audit.rowCount(latest)
+      val merged = Upsert(existing, incoming, "job_id", RefreshCols,
         Seq(col("extracted_ts").desc))
       graft.sources.Zone.overwriteInPlace(spark, merged, stagingDir)
-      latest.unpersist()
-      batchRows
+      batchRows()
     }
   }
 }

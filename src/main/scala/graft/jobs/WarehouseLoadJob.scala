@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.control.Audit
+import graft.model.Schemas
 import graft.operators.Scd2Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,7 +38,7 @@ object WarehouseLoadJob {
       // Read through Zone so its crash-recovery probe runs first: after a
       // crash between StagingJob's delete and rename, the completed
       // __rewrite temp needs promoting before this read (ADVICE r01).
-      val staging = graft.sources.Zone.readIfExists(spark, stagingDir)
+      val staging = graft.sources.Zone.readIfExists(spark, stagingDir, Schemas.stagingJob)
         .getOrElse(sys.error(
           s"staging table missing at $stagingDir — run StagingJob first"))
       // S10: the "dump" is a pushed-down predicate — on last_seen_date,
@@ -53,22 +54,25 @@ object WarehouseLoadJob {
         .select((Keys ++ Tracked).map(col) :+ col("extracted_date"): _*)
       if (expectations.nonEmpty)
         graft.operators.Expectations.assertAll(incoming, expectations)
-      val current = graft.sources.Zone.readIfExists(spark, warehouseDir)
+      val current = graft.sources.Zone.readIfExists(spark, warehouseDir, Schemas.warehouseJob)
         .getOrElse(incoming
           .withColumn("expired", to_date(lit(Scd2Merge.Sentinel)))
           .withColumn("is_deleted", lit(false))
           .limit(0))
+      // rows shipped this run (audit metric), counted as the merge
+      // consumes them
+      val (shipped, shippedRows) = Audit.rowCount(incoming)
       // incoming is collapsed to one row per natural key above and the
       // warehouse invariant is one active version per key → the
       // single-shuffle-join merge form applies
       val merged = Scd2Merge.singlePass(
         current,
-        incoming.withColumn("is_deleted", lit(false)),
+        shipped.withColumn("is_deleted", lit(false)),
         keys = Keys, tracked = Tracked,
         expiredCol = "expired", effectiveDate = lit(date),
         legacyNullChange = legacyNullChange)
       graft.sources.Zone.overwriteInPlace(spark, merged, warehouseDir)
-      incoming.count() // rows shipped this run (audit metric)
+      shippedRows()
     }
   }
 }

@@ -2,10 +2,12 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Explicit StructTypes for every non-parquet source (FIXTURES.md).
-  * The reference reads CSV headers positionally (`csv.DictReader`,
-  * `staging/staging_loader.py:72-79`); we pin explicit schemas instead
-  * of `inferSchema` — at 100 TB an inference pass is a full extra scan.
+/** Explicit StructTypes for every non-parquet source (FIXTURES.md) and
+  * every paper-layer parquet table. The reference reads CSV headers
+  * positionally (`csv.DictReader`, `staging/staging_loader.py:72-79`);
+  * we pin explicit schemas instead of `inferSchema` — at 100 TB an
+  * inference pass is a full extra scan, and even a parquet read without
+  * a schema runs a footer-merge job on every call.
   */
 object Schemas {
 
@@ -65,6 +67,32 @@ object Schemas {
     StructField("last_seen_date", DateType),
     StructField("extracted_ts", TimestampType),
     StructField("date_id", LongType),
+  ))
+
+  /** Warehouse fact row: one SCD2 version of a job
+    * (`loadtowh/create_warehouse_db.sql`), keyed by
+    * (job_title, company_name); `expired` is the sentinel
+    * ([[graft.operators.Scd2Merge.Sentinel]]) on the active version.
+    */
+  val warehouseJob: StructType = StructType(Seq(
+    StructField("job_title", StringType),
+    StructField("company_name", StringType),
+    StructField("salary", StringType),
+    StructField("location", StringType),
+    StructField("experience_required", StringType),
+    StructField("posted_time", StringType),
+    StructField("job_url", StringType),
+    StructField("extracted_date", DateType),
+    StructField("expired", DateType),
+    StructField("is_deleted", BooleanType),
+  ))
+
+  /** A reference mart (`datamart/config.xml:86-123`): one group column
+    * and its `COUNT(*) AS total_jobs`.
+    */
+  def referenceMart(groupCol: String): StructType = StructType(Seq(
+    StructField(groupCol, StringType),
+    StructField("total_jobs", LongType, nullable = false),
   ))
 
   /** Audit log row — the union shape of extract_log / process_log /

@@ -39,6 +39,14 @@ object Zone {
   def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] =
     if (exists(spark, dir)) Some(spark.read.parquet(dir)) else None
 
+  /** [[readIfExists]] with the table's schema pinned: no schema
+    * discovery (a schema-less parquet read runs a one-task footer-merge
+    * job on every read), and columns come back in `schema`'s order.
+    */
+  def readIfExists(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
+    if (exists(spark, dir)) Some(spark.read.schema(schema).parquet(dir)) else None
+
   /** Overwrite `dir` with `df` when `df`'s plan reads from `dir`
     * itself (parquet can't overwrite its own input): materialize fully
     * to a temp sibling, then swap via delete+rename. The swap is two

@@ -1,7 +1,13 @@
 package graft.jobs
 
 import graft.{SparkSpec, Tables}
+import graft.control.Audit
+import graft.model.Schemas
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
+import java.sql.{Date, Timestamp}
 
 class DashboardSpec extends SparkSpec {
   import spark.implicits._
@@ -46,5 +52,32 @@ class DashboardSpec extends SparkSpec {
       "a type with no events is a dense zero column, not a missing one")
     val total = types.map(t => p.agg(sum(col(t))).head().getLong(0)).sum
     assert(total == events.count())
+  }
+
+  test("a mart whose swap stopped between delete and rename is promoted " +
+      "on the next dashboard read") {
+    val base = tmpDir("mart_swap")
+    val (whDir, martDir) = (s"$base/wh", s"$base/mart")
+    val (day, active) = (Date.valueOf("2025-11-25"),
+      Date.valueOf(graft.operators.Scd2Merge.Sentinel))
+    def job(title: String, company: String, location: String) =
+      Row(title, company, "Thỏa thuận", location, "2 năm", "hôm qua",
+        s"http://a/$title", day, active, false)
+    spark.createDataFrame(java.util.Arrays.asList(
+        job("Kỹ sư dữ liệu", "Công ty A", "Hà Nội"),
+        job("DevOps", "Công ty A", "Đà Nẵng"),
+        job("Lập trình viên Java", "Công ty B", "Hà Nội")), Schemas.warehouseJob)
+      .write.parquet(whDir)
+    DataMartJob.run(spark, whDir, martDir,
+      new Audit(spark, s"$base/audit", () => new Timestamp(0L)), day.toString)
+    def chart() = Dashboard.chartData(spark, martDir)("agg_job_by_company")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(chart() == Seq("Công ty A" -> 2L, "Công ty B" -> 1L))
+    // the swap deleted the old mart, then stopped before the rename
+    val (target, temp) = (Paths.get(martDir, "agg_job_by_company"),
+      Paths.get(martDir, "agg_job_by_company__rewrite"))
+    Files.move(target, temp)
+    assert(chart() == Seq("Công ty A" -> 2L, "Công ty B" -> 1L))
+    assert(Files.isDirectory(target) && !Files.exists(temp))
   }
 }

@@ -3,6 +3,7 @@ package graft.jobs
 import graft.SparkSpec
 import graft.control.Audit
 import graft.sources.RawZone
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -16,36 +17,8 @@ import java.sql.Timestamp
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fixtureDay1 = Seq(
-    // source_id, job_id, title, company, salary, location, exp, posted, tags, url, logo, date, ts
-    ("topcv_jobs", "j1", "Kỹ sư dữ liệu", "Công ty A", "15 - 20 triệu", "Hà Nội",
-      "2 năm", "hôm qua", "spark, scala", "http://a/1", "", "2025-11-24", "2025-11-24 07:00:00"),
-    ("topcv_jobs", "j2", "Lập trình viên Java", "Công ty B", "Thỏa thuận", "Đà Nẵng",
-      null, "3 ngày trước", "java", "http://a/2", "", "2025-11-24", "2025-11-24 07:00:00"),
-    ("topcv_jobs", "", "thiếu id — bị loại", "X", "1 triệu", "HCM",
-      "", "hôm qua", "", "http://a/3", "", "2025-11-24", "2025-11-24 07:00:00"),
-    ("topcv_jobs", "j3", null, "Y", "Tới 30 triệu", "HCM",
-      "", "hôm qua", "", "http://a/4", "", "2025-11-24", "2025-11-24 07:00:00"),
-    // duplicate job_id in one batch — upsert keeps one
-    ("topcv_jobs", "j1", "Kỹ sư dữ liệu (cập nhật)", "Công ty A", "16 - 21 triệu", "Hà Nội",
-      "2 năm", "hôm qua", "spark", "http://a/1", "", "2025-11-24", "2025-11-24 07:30:00"),
-  ).toDF("source_id", "job_id", "job_title", "company_name", "salary", "location",
-    "experience_required", "posted_time", "tags", "job_url", "company_logo",
-    "extracted_date", "extracted_timestamp")
-
-  private def fixtureDay2 = Seq(
-    // j1 salary changes → SCD2 expires day-1 version
-    ("topcv_jobs", "j1", "Kỹ sư dữ liệu (cập nhật)", "Công ty A", "20 - 25 triệu", "Hà Nội",
-      "2 năm", "hôm qua", "spark", "http://a/1", "", "2025-11-25", "2025-11-25 07:00:00"),
-    // j2 unchanged attributes
-    ("topcv_jobs", "j2", "Lập trình viên Java", "Công ty B", "Thỏa thuận", "Đà Nẵng",
-      null, "4 ngày trước", "java", "http://a/2", "", "2025-11-25", "2025-11-25 07:00:00"),
-    // brand-new job
-    ("topcv_jobs", "j9", "DevOps", "Công ty C", "Trên 40 triệu", "Hà Nội",
-      "3 năm", "vừa xong", "k8s", "http://a/9", "", "2025-11-25", "2025-11-25 07:00:00"),
-  ).toDF("source_id", "job_id", "job_title", "company_name", "salary", "location",
-    "experience_required", "posted_time", "tags", "job_url", "company_logo",
-    "extracted_date", "extracted_timestamp")
+  private def fixtureDay1 = PipelineSpec.fixtureDay1(spark)
+  private def fixtureDay2 = PipelineSpec.fixtureDay2(spark)
 
   test("full pipeline: raw → staging → warehouse (SCD2) → marts, audited + idempotent") {
     val base = tmpDir("pipeline")
@@ -185,6 +158,45 @@ class PipelineSpec extends SparkSpec {
       .filter($"execution_date" < java.sql.Date.valueOf("2025-11-25")).isEmpty)
   }
 
+  test("observed row counts on empty input: an extract with no rows for " +
+      "the source and day, a staging day of only invalid rows and marts " +
+      "over a fact with no active rows each count 0 and record Success") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val base = tmpDir("empty")
+    val (rawDir, stagingDir, whDir, martDir) =
+      (s"$base/raw", s"$base/staging", s"$base/wh", s"$base/mart")
+    val audit = new Audit(spark, s"$base/audit",
+      () => Timestamp.valueOf("2025-11-24 08:00:00"))
+    val day = java.sql.Date.valueOf("2025-11-24")
+    def successRows(process: String): Seq[Any] =
+      audit.log().filter($"process_name" === process && $"status" === "Success")
+        .select($"rows_processed").collect().map(_.get(0)).toSeq
+
+    TimeLimits.failAfter(120.seconds) {
+      // the feed carries only topcv_jobs rows
+      assert(ExtractJob.run(spark, fixtureDay1, rawDir, audit,
+        "jobsgo_jobs", "2025-11-24") == 0L)
+      assert(successRows("extract_jobsgo_jobs") == Seq(0L))
+
+      RawZone.write(fixtureDay1.filter($"job_id" === "" || $"job_title".isNull), rawDir)
+      assert(StagingJob.run(spark, rawDir, stagingDir, DateDim.generate(spark), audit,
+        "topcv_jobs", "2025-11-24") == 0L)
+      assert(successRows("staging_topcv_jobs") == Seq(0L))
+
+      spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(
+          "Kỹ sư dữ liệu", "Công ty A", "15 - 20 triệu", "Hà Nội", "2 năm",
+          "hôm qua", "http://a/1", day, day, false)), graft.model.Schemas.warehouseJob)
+        .write.parquet(whDir)
+      val marts = DataMartJob.run(spark, whDir, martDir, audit, "2025-11-24")
+      assert(marts == DataMartJob.ReferenceSpecs.map(_.name -> 0L).toMap)
+      DataMartJob.ReferenceSpecs.foreach(spec =>
+        assert(successRows(s"load_to_dm_${spec.name}") == Seq(0L)))
+      assert(Dashboard.chartData(spark, martDir).values.forall(_.isEmpty))
+    }
+  }
+
   test("audit retention GC (cleanup_old_logs.sh:11): the retained window " +
       "is exact and a re-run is a no-op") {
     val audit = new Audit(spark, tmpDir("auditgc"), () => new Timestamp(7000L))
@@ -319,5 +331,46 @@ class PipelineSpec extends SparkSpec {
       s"schema drift: ${imported.schema} vs ${gen.schema}")
     assert(imported.count() == gen.count())
     assert(imported.except(gen).isEmpty && gen.except(imported).isEmpty)
+  }
+}
+
+/** The golden scrape fixture, shared with [[JobBudgetSpec]]. */
+object PipelineSpec {
+
+  def fixtureDay1(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      // source_id, job_id, title, company, salary, location, exp, posted, tags, url, logo, date, ts
+      ("topcv_jobs", "j1", "Kỹ sư dữ liệu", "Công ty A", "15 - 20 triệu", "Hà Nội",
+        "2 năm", "hôm qua", "spark, scala", "http://a/1", "", "2025-11-24", "2025-11-24 07:00:00"),
+      ("topcv_jobs", "j2", "Lập trình viên Java", "Công ty B", "Thỏa thuận", "Đà Nẵng",
+        null, "3 ngày trước", "java", "http://a/2", "", "2025-11-24", "2025-11-24 07:00:00"),
+      ("topcv_jobs", "", "thiếu id — bị loại", "X", "1 triệu", "HCM",
+        "", "hôm qua", "", "http://a/3", "", "2025-11-24", "2025-11-24 07:00:00"),
+      ("topcv_jobs", "j3", null, "Y", "Tới 30 triệu", "HCM",
+        "", "hôm qua", "", "http://a/4", "", "2025-11-24", "2025-11-24 07:00:00"),
+      // duplicate job_id in one batch — upsert keeps one
+      ("topcv_jobs", "j1", "Kỹ sư dữ liệu (cập nhật)", "Công ty A", "16 - 21 triệu", "Hà Nội",
+        "2 năm", "hôm qua", "spark", "http://a/1", "", "2025-11-24", "2025-11-24 07:30:00"),
+    ).toDF("source_id", "job_id", "job_title", "company_name", "salary", "location",
+      "experience_required", "posted_time", "tags", "job_url", "company_logo",
+      "extracted_date", "extracted_timestamp")
+  }
+
+  def fixtureDay2(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      // j1 salary changes → SCD2 expires day-1 version
+      ("topcv_jobs", "j1", "Kỹ sư dữ liệu (cập nhật)", "Công ty A", "20 - 25 triệu", "Hà Nội",
+        "2 năm", "hôm qua", "spark", "http://a/1", "", "2025-11-25", "2025-11-25 07:00:00"),
+      // j2 unchanged attributes
+      ("topcv_jobs", "j2", "Lập trình viên Java", "Công ty B", "Thỏa thuận", "Đà Nẵng",
+        null, "4 ngày trước", "java", "http://a/2", "", "2025-11-25", "2025-11-25 07:00:00"),
+      // brand-new job
+      ("topcv_jobs", "j9", "DevOps", "Công ty C", "Trên 40 triệu", "Hà Nội",
+        "3 năm", "vừa xong", "k8s", "http://a/9", "", "2025-11-25", "2025-11-25 07:00:00"),
+    ).toDF("source_id", "job_id", "job_title", "company_name", "salary", "location",
+      "experience_required", "posted_time", "tags", "job_url", "company_logo",
+      "extracted_date", "extracted_timestamp")
   }
 }
