@@ -18,6 +18,16 @@ object RunOne {
       rest.contains("explain"))
   }
 
+  /** `SPARK_GRAFT_EXTRA_CONF` entries: `;`-separated `key=value` pairs;
+    * the value may itself contain `=` (only the first one splits).
+    */
+  private[graft] def parseExtraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
+      (kv.substring(0, i), kv.substring(i + 1))
+    }
+
   def main(args: Array[String]): Unit = {
     val (name, sfDir, explain) = parseArgs(args)
     val spark = GraftSession.local(GraftSession.localCores).getOrCreate()
@@ -59,9 +69,8 @@ object RunOne {
         }
       })
     }
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-    })
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(parseExtraConf).getOrElse(Nil)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
     val fn = SparkEntry.queries(name)
     if (explain) fn(spark, sfDir).explain("formatted")
     // time construction + count per run, as Bench does — operators with

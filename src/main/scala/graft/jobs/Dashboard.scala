@@ -13,13 +13,12 @@ import org.apache.spark.sql.functions._
   */
 object Dashboard {
 
-  /** The four reference charts (`config.xml:86-123`). */
-  val Charts: Seq[(String, String, String)] = Seq(
-    ("agg_job_by_company", "company_name", "total_jobs"),
-    ("agg_job_by_location", "location", "total_jobs"),
-    ("agg_job_by_salary", "salary", "total_jobs"),
-    ("agg_job_by_experience", "experience_required", "total_jobs"),
-  )
+  /** The four reference charts (`config.xml:86-123`): one
+    * `(mart, group column, value column)` per [[DataMartJob.ReferenceSpecs]]
+    * mart, so the chart list cannot drift from the marts it reads.
+    */
+  val Charts: Seq[(String, String, String)] =
+    DataMartJob.ReferenceSpecs.map(s => (s.name, s.groupBy.head, s.metricNames.head))
 
   /** Chart frames keyed by mart name; `topN` keeps the payload
     * driver-safe (TakeOrderedAndProject — never a full collect of an

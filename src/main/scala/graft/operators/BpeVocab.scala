@@ -136,11 +136,8 @@ object BpeVocab {
     * sequential one at equal size, and segmentation under it remains
     * lossless.
     *
-    * `batchSize = 0` AUTO-TUNES: `clamp(numMerges / 64, 16, 1024)`,
-    * targeting ~64 aggregate rounds at any vocabulary size (conflicts
-    * and under-filled rounds add a few) — 512 at the production-shaped
-    * 32k, the batch size the 13× measurement above validated; small
-    * vocabularies keep at least 16 so the batching still engages.
+    * `batchSize` must be at least 1; every SparkEntry query (q100,
+    * q101, q180) trains at the exact default.
     */
   def train(spark: SparkSession, docs: DataFrame, textCol: String,
       numMerges: Int, batchSize: Int = 1): DataFrame =
@@ -153,10 +150,7 @@ object BpeVocab {
   private[graft] def trainWithRounds(spark: SparkSession, docs: DataFrame,
       textCol: String, numMerges: Int, batchSize: Int = 1): (DataFrame, Int) = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    require(batchSize >= 0, s"batchSize must be >= 0 (0 = auto), got $batchSize")
-    val effBatch =
-      if (batchSize > 0) batchSize
-      else math.min(1024, math.max(16, numMerges / 64))
+    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val w = wordCounts(docs, textCol)
     // the type table materializes ONCE; each iteration re-reads this
     // cache through a single [[graft.plans.BpeApplyMerges]] node
@@ -169,7 +163,7 @@ object BpeVocab {
     try {
       var done = false
       while (merges.size < numMerges && !done) {
-        val k = math.min(effBatch, numMerges - merges.size)
+        val k = math.min(batchSize, numMerges - merges.size)
         // candidate window: conflicts skip down the ranking, so fetch
         // a few × k (bounded driver collect — the IvfIndex-codebook
         // discipline; an under-filled round just runs one more round)

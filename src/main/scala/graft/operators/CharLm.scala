@@ -45,27 +45,15 @@ object CharLm {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(
           text.cast("string")), k))
 
-  /** `(bucket, ct)` of the lowercased k-char windows — ≤ `dim` rows
-    * after one explode + hash aggregate (map-side combine), additive
-    * over disjoint doc sets exactly like [[Dsir.bucketCountsDf]]
-    * (merge with [[Dsir.mergeCounts]] / retract with
-    * [[Dsir.subtractCounts]] for an incrementally-maintained model).
-    */
-  def ngramCounts(df: DataFrame, textCol: String, k: Int, dim: Int): DataFrame = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    df.select(explode(charNgrams(lower(col(textCol)), k)).as("__h"))
-      .select((col("__h") % dim).as("bucket")) // h60 is non-negative
-      .groupBy("bucket").agg(count(lit(1)).as("ct"))
-  }
-
   /** BOTH n-gram orders' bucket tags off one row — the one-scan fit
     * column (r15): each row explodes its 3- and 2-char window hashes
     * tagged by order, so ONE aggregate pass serves both count tables.
-    * The per-(k, bucket) counts are identical to [[ngramCounts]] run
-    * per order (the struct tagging does not change either window
-    * multiset); what the fusion removes is the SECOND scan of the
-    * input — which for the perplexity fit includes re-running the
-    * upstream LID-restriction kernel over the sample.
+    * The per-(k, bucket) counts are identical to one
+    * `explode(charNgrams(_, k)) % dim` aggregate per order (the struct
+    * tagging does not change either window multiset); what the fusion
+    * removes is the SECOND scan of the input — which for the
+    * perplexity fit includes re-running the upstream LID-restriction
+    * kernel over the sample.
     */
   private def taggedNgrams(textCol: String, dim3: Int, dim2: Int): Column = {
     val t = lower(col(textCol))

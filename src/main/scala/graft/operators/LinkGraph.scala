@@ -109,27 +109,6 @@ object LinkGraph {
     run(edgesIn, srcCol, dstCol, None, Some(prevRanks),
       iters, dampNum, dampDen, scale)
 
-  /** [[pageRank]] plus convergence telemetry: returns the final ranks
-    * AND the per-round L1 delta `Σ_v |r_t(v) − r_{t−1}(v)|` (fp units)
-    * — the evidence callers size `iters` on. The fixed iteration count
-    * stays the deterministic-oracle contract (q158/q160); this surface
-    * exists so the count is CHOSEN from a measured contraction curve
-    * (BASELINE.md records iterations-to-1e-6 at sf0.1) instead of
-    * guessed. One extra node-sized join + scalar aggregate per round —
-    * each round is already materialized (localCheckpoint), so the
-    * delta reads two cached node tables. The damped update is a
-    * contraction: deltas shrink ~×(dampNum/dampDen) per round
-    * (LinkGraphSpec asserts the monotone decrease).
-    */
-  def pageRankWithDeltas(edgesIn: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 5, dampNum: Long = 85L, dampDen: Long = 100L,
-      scale: Long = 1L << 20): (DataFrame, Seq[Long]) = {
-    val buf = scala.collection.mutable.ArrayBuffer[Long]()
-    val ranks = run(edgesIn, srcCol, dstCol, None, None,
-      iters, dampNum, dampDen, scale, telemetry = Some(buf))
-    (ranks, buf.toSeq)
-  }
-
   /** Triangle counting + local clustering coefficient over an
     * undirected graph, by degree-ordered edge orientation (Schank &
     * Wagner's forward algorithm / Suri & Vassilvitskii's MapReduce
@@ -209,9 +188,7 @@ object LinkGraph {
 
   private def run(edgesIn: DataFrame, srcCol: String, dstCol: String,
       seedsIn: Option[DataFrame], warmStart: Option[DataFrame],
-      iters: Int, dampNum: Long, dampDen: Long, scale: Long,
-      telemetry: Option[scala.collection.mutable.ArrayBuffer[Long]] = None)
-      : DataFrame = {
+      iters: Int, dampNum: Long, dampDen: Long, scale: Long): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen && scale >= 1,
       s"pageRank: bad parameters iters=$iters damp=$dampNum/$dampDen scale=$scale")
     val edges0 = edgesIn
@@ -324,14 +301,6 @@ object LinkGraph {
       // → 43-48). One eager checkpoint per round is the measured floor
       // for the DataFrame loop.
       ranks = next.localCheckpoint(eager = true)
-      // convergence telemetry BEFORE releasing prev: one node-sized
-      // join of two already-materialized tables + a scalar aggregate
-      telemetry.foreach { buf =>
-        buf += ranks.select(col("node"), col("rank_fp").as("__rn"))
-          .join(prev.select(col("node"), col("rank_fp").as("__rp")), "node")
-          .agg(coalesce(sum(abs(col("__rn") - col("__rp"))), lit(0L)))
-          .head().getLong(0)
-      }
       prev.unpersist()
       // edges0 is only the SETUP's input (outdeg/allNodes/the deg-stamp
       // join): once round 0's job has materialized the deg-stamped

@@ -17,4 +17,19 @@ class RunOneSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](RunOne.parseArgs(Array()))
     assert(e.getMessage.contains("usage: RunOne"))
   }
+
+  test("extra conf: an entry with no `=` names itself in the error") {
+    val e = intercept[IllegalArgumentException](RunOne.parseExtraConf("a=b;foo"))
+    assert(e.getMessage.contains("'foo'"))
+  }
+
+  test("extra conf: an empty segment is an error, not a MatchError") {
+    val e = intercept[IllegalArgumentException](RunOne.parseExtraConf(";a=b"))
+    assert(e.getMessage.contains("entry ''"))
+  }
+
+  test("extra conf: only the first `=` splits, so a value may contain `=`") {
+    assert(RunOne.parseExtraConf("spark.x=a=b;spark.y=1") ==
+      Seq("spark.x" -> "a=b", "spark.y" -> "1"))
+  }
 }

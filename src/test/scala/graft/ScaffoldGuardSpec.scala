@@ -14,6 +14,9 @@ import scala.jdk.CollectionConverters._
   *    [[graft.streaming.EventStream.runAvailableNow]];
   *  - every SparkSession is built by [[GraftSession]], apart from the
   *    frozen `Bench` main;
+  *  - the only mains are `Bench`, `Verify`, `RunOne` and `PlanDump`,
+  *    and only `GraftSession.localCores`, `RunOne` and `Bench` read the
+  *    environment;
   *  - the paper-layer jobs and [[graft.control.Audit]] read parquet only
   *    with the table's schema pinned (a schema-less read runs a
   *    schema-discovery job on every call).
@@ -24,7 +27,10 @@ class ScaffoldGuardSpec extends AnyFunSuite {
     """\s*(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:override\s+)?def\s+(\w+).*""".r
 
   /** `File.scala:enclosingDef` for every line under `root` whose code
-    * (comments stripped) `hit` accepts.
+    * (comments stripped) `hit` accepts. The enclosing def is the
+    * nearest def at or above the hit that is indented less than every
+    * line between them, so a sibling local def above the hit is not
+    * mistaken for it.
     */
   private def sites(root: String, hit: String => Boolean): List[String] = {
     val dir = Paths.get(root)
@@ -38,10 +44,19 @@ class ScaffoldGuardSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala")).toList
       .flatMap { f =>
         val lines = Files.readAllLines(f).asScala.toIndexedSeq
+        @annotation.tailrec
+        def enclosing(j: Int, floor: Int): Option[String] =
+          if (j < 0) None
+          else if (lines(j).trim.isEmpty) enclosing(j - 1, floor)
+          else {
+            val indent = lines(j).segmentLength(_ == ' ')
+            lines(j) match {
+              case Def(name) if indent < floor => Some(name)
+              case _ => enclosing(j - 1, floor.min(indent))
+            }
+          }
         lines.indices.filter(i => hit(code(lines(i)))).map { i =>
-          val enclosing = (i to 0 by -1).iterator.map(lines(_))
-            .collectFirst { case Def(name) => name }
-          s"${f.getFileName}:${enclosing.getOrElse("<top level>")}"
+          s"${f.getFileName}:${enclosing(i, Int.MaxValue).getOrElse("<top level>")}"
         }
       }
       .sorted
@@ -62,6 +77,20 @@ class ScaffoldGuardSpec extends AnyFunSuite {
     val test = sites("src/test/scala", _.contains("SparkSession.builder"))
       .filterNot(_.startsWith("ScaffoldGuardSpec.scala:"))
     assert(test.isEmpty, s"tests build their own session: ${test.mkString(", ")}")
+  }
+
+  test("def main appears only in Bench, Verify, RunOne and PlanDump") {
+    val found = sites("src/main/scala", """\bdef\s+main\s*\(""".r.findFirstIn(_).isDefined)
+    assert(found == List("Bench.scala:main", "PlanDump.scala:main",
+      "RunOne.scala:main", "Verify.scala:main"),
+      s"def main sites: ${found.mkString(", ")}")
+  }
+
+  test("sys.env appears only in GraftSession.localCores, RunOne.main and Bench.main") {
+    val found = sites("src/main/scala", _.contains("sys.env")).distinct
+    assert(found == List("Bench.scala:main", "GraftSession.scala:localCores",
+      "RunOne.scala:main"),
+      s"sys.env sites: ${found.mkString(", ")}")
   }
 
   test("paper-layer jobs and Audit never read parquet without a schema") {

@@ -239,18 +239,4 @@ class BpeVocabSpec extends SparkSpec {
       assert(again == first)
     } finally segged.unpersist()
   }
-
-  test("batchSize = 0 auto-tunes (clamped numMerges/64) and matches the explicit batch") {
-    import spark.implicits._
-    val docs = Seq("lower lowest newer newest wider widest lower newest",
-      "low new wide slow slower slowest newer lowest")
-      .toDF("text")
-    // 32 merges → auto batch = clamp(32/64, 16, 1024) = 16
-    val auto = BpeVocab.train(spark, docs, "text", 32, batchSize = 0)
-      .collect().map(_.toString).toSeq
-    val explicit = BpeVocab.train(spark, docs, "text", 32, batchSize = 16)
-      .collect().map(_.toString).toSeq
-    assert(auto == explicit)
-    assert(auto.nonEmpty)
-  }
 }
