@@ -21,8 +21,14 @@ import org.apache.spark.sql.SparkSession
   * }}}
   */
 object GraftSession {
+  /** The graft SQL functions, and [[graft.sources.LocalFs]] as the
+    * `file:` filesystem of both Hadoop file APIs.
+    */
   private def base: SparkSession.Builder =
     SparkSession.builder().withExtensions(new GraftExtensions)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.LocalFs.Fc].getName)
 
   def builder(totalCores: Int, largestTableGB: Long): SparkSession.Builder =
     SessionDefaults.configure(base, totalCores, largestTableGB)

@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.model.Schemas
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The file raw zone: Hive-partitioned CSV, layout
   * `raw/source_id=<src>/extracted_date=<yyyy-MM-dd>/part-*.csv` — the
@@ -11,9 +13,10 @@ import org.apache.spark.sql.functions._
   * `extract/topcv_scraper_v5.py:198-201`, `staging/staging_loader.py:55-57`).
   *
   * Partition pruning replaces the reference's glob: a read filtered on
-  * `(source_id, extracted_date)` lists exactly one directory — the same
+  * `(source_id, extracted_date)` scans exactly one directory — the same
   * I/O the glob did, but composable with Catalyst (check
-  * `PartitionFilters` in `.explain`). The reference's header-skip
+  * `PartitionFilters` in `.explain`); [[readPartition]] lists only that
+  * directory too. The reference's header-skip
   * concat "merge" step (S6, `run_all_scrapers.sh:99-133`) vanishes:
   * a multi-file read is already a union.
   */
@@ -31,27 +34,37 @@ object RawZone {
       .option("partitionOverwriteMode", "dynamic")
       .csv(rawDir)
 
+  // partition cols are directory-encoded, not in the files
+  private val fileSchema = StructType(
+    Schemas.rawScrape.filterNot(f => f.name == "source_id" || f.name == "extracted_date"))
+
   /** Read the raw zone with the pinned schema. `source_id` /
     * `extracted_date` come back as partition columns; filters on them
     * prune directories.
     */
-  def read(spark: SparkSession, rawDir: String): DataFrame = {
-    // partition cols are directory-encoded, not in the files
-    val fileSchema = org.apache.spark.sql.types.StructType(
-      Schemas.rawScrape.filterNot(f =>
-        f.name == "source_id" || f.name == "extracted_date"))
+  def read(spark: SparkSession, rawDir: String): DataFrame = csv(spark, rawDir, rawDir)
+
+  /** `path` under `rawDir`, with the partition columns taken from the path. */
+  private def csv(spark: SparkSession, rawDir: String, path: String): DataFrame =
     spark.read
       .schema(fileSchema)
       .option("header", "true")
       .option("basePath", rawDir)
-      .csv(rawDir)
+      .csv(path)
       .withColumn("source_id", col("source_id").cast("string"))
       .withColumn("extracted_date", col("extracted_date").cast("string"))
-  }
 
-  /** One partition, by predicate — pruning does the directory math. */
+  /** One partition: only its own directory is listed, so the read does
+    * not grow with the zone's history (listing the whole zone adds a
+    * parallel-listing job once a source holds more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` days).
+    * A partition never written reads as an empty frame.
+    */
   def readPartition(spark: SparkSession, rawDir: String,
-      sourceId: String, date: String): DataFrame =
-    read(spark, rawDir)
-      .filter(col("source_id") === sourceId && col("extracted_date") === date)
+      sourceId: String, date: String): DataFrame = {
+    val dir = s"$rawDir/source_id=${escapePathName(sourceId)}/extracted_date=${escapePathName(date)}"
+    if (Zone.exists(spark, dir)) csv(spark, rawDir, dir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(fileSchema ++
+      Seq(StructField("source_id", StringType), StructField("extracted_date", StringType))))
+  }
 }

@@ -19,7 +19,10 @@ import scala.jdk.CollectionConverters._
   *    environment;
   *  - the paper-layer jobs and [[graft.control.Audit]] read parquet only
   *    with the table's schema pinned (a schema-less read runs a
-  *    schema-discovery job on every call).
+  *    schema-discovery job on every call);
+  *  - no driver-side parquet reader comes from `ParquetReader.builder`,
+  *    which builds a fresh Hadoop `Configuration` (and re-parses its XML
+  *    defaults) for every file it opens.
   */
 class ScaffoldGuardSpec extends AnyFunSuite {
 
@@ -104,5 +107,10 @@ class ScaffoldGuardSpec extends AnyFunSuite {
     val found = sites("src/main/scala", schemaLess.findFirstIn(_).isDefined)
       .filter(s => files.contains(s.takeWhile(_ != ':')))
     assert(found.isEmpty, s"schema-less parquet reads: ${found.mkString(", ")}")
+  }
+
+  test("no ParquetReader.builder in main code: readers use the session's Hadoop conf") {
+    val found = sites("src/main/scala", _.contains("ParquetReader.builder("))
+    assert(found.isEmpty, s"ParquetReader.builder sites: ${found.mkString(", ")}")
   }
 }
